@@ -309,8 +309,8 @@ PHRASE_QUESTION = "part filter"
 
 def _q_phrase_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-phrase top-k served from the persisted positional index
-    (bucket-pruned scan -> executor decode -> anchor intersection);
-    oracle = the relational twin, proving index == brute force."""
+    (bucket-pruned fetch -> numpy decode -> anchor intersection on the
+    driver); oracle = the relational twin, proving index == brute force."""
     from sifter_mrc_search_engine_spark.operators import positional as _pos
 
     if sf_dir not in _POS_IDX_DIRS:

@@ -13,14 +13,18 @@ Routes (reference: modules/mrc_service/server.py):
                               — only when --positional-index is given)
 
 ``--meta`` points at a parquet of (doc_id, DOCID, title, url, content)
-document metadata for the answer back-join; ``--preload`` pulls postings
-into driver memory for sub-ms routing (serving-head mode).
+document metadata for the answer back-join. ``--preload`` pulls the
+postings into driver memory for sub-ms routing (serving-head mode) —
+the positional postings too when ``--positional-index`` is given, so no
+request of either route runs a Spark job; each preload is budget-checked
+before it collects, and the two run concurrently at start-up.
 """
 
 from __future__ import annotations
 
 import argparse
 import signal
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
@@ -39,24 +43,26 @@ def main(argv=None) -> None:
     from sifter_mrc_search_engine_spark.plans.http_service import HttpFrontDoor
     from sifter_mrc_search_engine_spark.plans.query import IndexSearcher
     from sifter_mrc_search_engine_spark.plans.service import InferenceService
+    from sifter_mrc_search_engine_spark.plans.structured import StructuredSearchService
 
     spark = SparkSession.builder.getOrCreate()
-    searcher = IndexSearcher(spark, args.index, buckets=args.buckets, preload=args.preload)
-    meta = None
-    if args.meta:
-        meta = {
-            int(r["doc_id"]): {
-                k: r[k] for k in ("DOCID", "title", "url", "content") if k in r
-            }
-            for r in spark.read.parquet(args.meta).collect()
-        }
-    structured = None
-    if args.positional_index:
-        from sifter_mrc_search_engine_spark.plans.structured import (
-            StructuredSearchService,
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        # the positional preload overlaps the free-text one below
+        pending = pool.submit(
+            StructuredSearchService, spark, args.positional_index, preload=args.preload
+        ) if args.positional_index else None
+        searcher = IndexSearcher(
+            spark, args.index, buckets=args.buckets, preload=args.preload
         )
-
-        structured = StructuredSearchService(spark, args.positional_index)
+        meta = None
+        if args.meta:
+            meta = {
+                int(r["doc_id"]): {
+                    k: r[k] for k in ("DOCID", "title", "url", "content") if k in r
+                }
+                for r in spark.read.parquet(args.meta).collect()
+            }
+        structured = pending.result() if pending else None
     door = HttpFrontDoor(
         InferenceService(searcher, meta), port=args.port, structured=structured
     ).start()

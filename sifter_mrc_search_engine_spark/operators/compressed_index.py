@@ -30,6 +30,9 @@ because avgdl/N are fixed by the corpus stats that precede encoding.
 
 from __future__ import annotations
 
+import json
+import threading
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -47,6 +50,7 @@ from pyspark.sql.types import (
 from ..constants import BLOCK_SIZE, BM25_B, BM25_K1, SALT_FANOUT, SALT_THRESHOLD, TERM_BUCKETS
 from .index_build import term_bucket_expr
 from .postings_codec import encode_postings
+from ..functions import fsio
 from ..functions.analyzer import tokenize_expr
 
 INDEX_SCHEMA = StructType(
@@ -138,6 +142,70 @@ def check_preload_budget(
             f"really has the headroom."
         )
     return est
+
+
+#: driver-resident norms per (index_dir, stats.json freshness) — the ONE
+#: norms cache every driver-side scorer shares (WAND, the positional
+#: kernel). Guarded by a lock: HTTP handler threads load and evict
+#: concurrently, and an unsynchronized evict-while-insert dies with
+#: "dictionary changed size during iteration".
+_DOCLEN_CACHE: dict[tuple, tuple] = {}
+_DOCLEN_LOCK = threading.Lock()
+
+
+def invalidate_norms_cache(index_dir: str | None = None) -> None:
+    """Drop cached norms for ``index_dir`` (or all). Build/compaction
+    paths need not call this — the cache key includes the stats.json
+    freshness token (mtime+size), so a rebuilt index at the same path
+    misses naturally."""
+    with _DOCLEN_LOCK:
+        for k in [k for k in _DOCLEN_CACHE if index_dir is None or k[0] == index_dir]:
+            del _DOCLEN_CACHE[k]
+
+
+def _load_norms(spark, index_dir: str, budget_bytes: int | None = None):
+    """(doclen lookup, n_docs, avgdl), cached per (index_dir, freshness).
+
+    The freshness token is stats.json's (mtime_ns, size): rebuilding or
+    compacting an index at the same path in one process must not serve
+    stale doc lengths. Dense numpy array when doc_ids are nonnegative
+    and reasonably packed (fast vectorized lookups); dict fallback for
+    sparse / hash-derived / negative id spaces.
+
+    ``budget_bytes`` gates ONLY the cache-miss collect: a cache hit
+    costs zero additional driver memory, so it must neither pay the
+    estimate aggregate nor be refusable.
+    """
+    stats_path = fsio.join(index_dir, "stats.json")
+    key = (index_dir, fsio.freshness_token(stats_path, spark))
+    with _DOCLEN_LOCK:
+        hit = _DOCLEN_CACHE.get(key)
+    if hit is not None:
+        return hit
+    stats = json.loads(fsio.read_text(stats_path, spark))
+    doclens_df = spark.read.parquet(f"{index_dir}/doclens")
+    check_preload_budget(doclens_df, f"doclens of {index_dir}", budget_bytes)
+    rows = doclens_df.collect()
+    ids = [r["doc_id"] for r in rows]
+    min_id, max_id = min(ids), max(ids)
+    if min_id >= 0 and max_id < max(8 * len(ids), 1_000_000):
+        dl = np.zeros(max_id + 1, dtype=np.int64)
+        for r in rows:
+            dl[r["doc_id"]] = r["doc_len"]
+        out = (dl, int(stats["n_docs"]), float(stats["avgdl"]))
+    else:
+        out = (
+            {r["doc_id"]: r["doc_len"] for r in rows},
+            int(stats["n_docs"]),
+            float(stats["avgdl"]),
+        )
+    with _DOCLEN_LOCK:
+        # evict superseded versions of the same index — a rebuild-per-batch
+        # process must not pin every generation's doclen array forever
+        for stale in [k for k in _DOCLEN_CACHE if k[0] == index_dir]:
+            del _DOCLEN_CACHE[stale]
+        _DOCLEN_CACHE[key] = out
+    return out
 
 
 _LAST_TF: DataFrame | None = None

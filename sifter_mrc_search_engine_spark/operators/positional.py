@@ -14,24 +14,26 @@ Every operator here exists in two shapes:
 
 * a **relational** form over the raw ``documents`` table (tokenize →
   match → BM25), which doubles as the DuckDB-oracle-checkable contract
-  query, and
-* for phrase queries an **index-backed** form over a persisted positional
-  index (delta+varbyte doc gaps AND within-doc position deltas, bucket-
-  partitioned like the main index), which is the serving path: the scan
-  prunes to the phrase terms' buckets, positions decode executor-side,
-  and the adjacency intersection is ONE shuffle on (doc_id, anchor).
+  query and is the reference the serving kernel is pinned to, and
+* an **index-served** form over a persisted positional index (delta+
+  varbyte doc gaps AND within-doc position deltas, bucket-partitioned
+  like the main index). It runs on the driver like the free-text WAND
+  path: fetch the query terms' encoded rows (a preloaded dict, or one
+  bucket- and term-pruned collect), decode with numpy, match with numpy
+  twins of the relational matchers, and score with the shared numpy
+  BM25 fold (:func:`operators.wand.bm25_fold_topk`).
 
-Scale posture (10^12 docs): phrase/proximity matching only ever touches
-postings of the query's terms (bucket partition pruning + term row-group
-pruning); the anchor aggregation keys on (doc_id, anchor) so no
-per-term position list is ever collected; hot terms are doc_id-range
-segmented exactly like the main index so one Zipf-head term cannot pin a
-single task. Scoring reuses the deterministic sorted-term float64 fold
-from :mod:`operators.bm25`.
+Scale posture (10^12 docs): serving only ever touches postings of the
+query's terms (bucket partition pruning + term row-group pruning), a few
+KB per request; hot terms are doc_id-range segmented exactly like the
+main index so one Zipf-head term cannot pin a single build task. Every
+score sums per-term contributions in ascending-term float64 order, the
+fold :mod:`operators.bm25` pins.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 from typing import Sequence
@@ -41,7 +43,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
     LongType,
     StringType,
@@ -52,10 +53,17 @@ from pyspark.sql.types import (
 from ..constants import BM25_B, BM25_K1, DEFAULT_TOP_K
 from ..functions import fsio
 from ..functions.analyzer import analyze
+from ..functions.xxhash import term_bucket
 from .bm25 import bm25_term_scores, sum_in_term_order
-from .compressed_index import write_doclens
+from .compressed_index import (
+    DEFAULT_PRELOAD_BUDGET_BYTES,
+    _load_norms,
+    check_preload_budget,
+    write_doclens,
+)
 from .index_build import corpus_stats, doc_lengths, term_bucket_expr, term_frequencies
 from .postings_codec import varbyte_decode, varbyte_encode
+from .wand import bm25_fold_topk
 
 #: tokens produced by the analyzer ([a-z0-9가-힣]+) contain no SQL LIKE
 #: metacharacters or quotes, so they embed directly into oracle strings;
@@ -97,9 +105,10 @@ def _anchor_match(occ: DataFrame, slots: Sequence[str], distinct: bool = True) -
     """``(doc_id)`` where some anchor ``pos − slot`` is covered by ALL m
     slots — the consecutive-phrase condition. ``occ`` is
     ``(doc_id, pos, term)`` occurrence rows already pruned to the slot
-    terms (from posexplode or index decode — the matcher is the ONE
-    shared copy for both). One shuffle on (doc_id, anchor); a token can
-    serve multiple slots (repeated-word phrases like "a b a" work).
+    terms — the relational reference that the serving kernel's
+    :func:`_phrase_docs` is pinned to. One shuffle on (doc_id, anchor);
+    a token can serve multiple slots (repeated-word phrases like
+    "a b a" work).
 
     Slot coverage is a ``bit_or`` of ``1 << slot`` — one plain
     HashAggregate; the r5 ``countDistinct(slot)`` expanded to a
@@ -277,8 +286,9 @@ def _min_cover_match(
 ) -> DataFrame:
     """``(doc_id)`` where ALL ``uterms`` co-occur inside some span of
     ``window`` consecutive positions (unordered). ``occ`` is
-    ``(doc_id, pos, term)`` rows pruned to the query terms — the ONE
-    shared minimal-cover matcher for the relational and indexed paths.
+    ``(doc_id, pos, term)`` rows pruned to the query terms — the
+    relational reference that the serving kernel's :func:`_near_docs`
+    is pinned to.
 
     Pure-Catalyst: over the doc's occurrences ordered by position,
     ``last_j`` = the latest preceding position of term j (running MAX
@@ -401,9 +411,9 @@ def _ordered_chain_match(
 ) -> DataFrame:
     """``(doc_id)`` where the slot terms appear IN ORDER at strictly
     increasing positions p1 < … < pm with pm − p1 ≤ window − 1. ``occ``
-    is ``(doc_id, pos, term)`` rows pruned to the slot terms — the ONE
-    shared ordered-SpanNear matcher for the relational and indexed
-    paths.
+    is ``(doc_id, pos, term)`` rows pruned to the slot terms — the
+    relational reference that the serving kernel's
+    :func:`_ordered_docs` is pinned to.
 
     Greedy chain join, skew-safe at the physical level: each step joins
     on (doc_id, position-block) — candidate pn must lie in
@@ -670,10 +680,15 @@ def fuzzy_topk(
     )
 
 
+_ASCII_TERM = re.compile(r"[a-z0-9]+\Z")
+_HANGUL = re.compile("[가-힣]")
+
+
 def _fuzzy_pred(q: str, max_edits: int):
-    """The script-consistent fuzzy vocabulary predicate (shared by the
-    relational and indexed paths; ``q`` pre-validated + lowercased)."""
-    ascii_q = bool(re.match(r"[a-z0-9]+\Z", q))
+    """The script-consistent fuzzy vocabulary predicate as a Column (the
+    relational rewrite; the indexed scan's pruning filter, whose driver
+    twin is :func:`_fuzzy_pick`). ``q`` pre-validated + lowercased."""
+    ascii_q = bool(_ASCII_TERM.match(q))
     script = (
         F.col("term").rlike("^[a-z0-9]+$")
         if ascii_q
@@ -796,15 +811,15 @@ def _bool_clauses(must, should, must_not):
 def _bool_match_ids(
     tf: DataFrame, must_t: Sequence[str], score_t: Sequence[str], not_t: Sequence[str]
 ) -> DataFrame:
-    """``(doc_id)`` passing the boolean gates — the ONE shared matcher
-    for the relational and indexed paths. ``tf`` is ``(doc_id, term)``
-    rows (extra columns fine) pre-pruned to the query's terms.
+    """``(doc_id)`` passing the boolean gates — the relational reference
+    that the serving kernel's :func:`_bool_docs` is pinned to. ``tf`` is
+    ``(doc_id, term)`` rows (extra columns fine) pre-pruned to the
+    query's terms.
 
     All three clauses fold into a SINGLE doc_id aggregation (must-term
     count, any-excluded flag, any-score flag) instead of one subplan per
     clause + anti-join — Spark does not dedupe common subplans, so the
-    per-clause shape re-scans (and on the indexed path re-decodes) the
-    postings once per clause."""
+    per-clause shape re-scans the tokenized corpus once per clause."""
     nm = F.count_distinct(
         F.when(F.col("term").isin(must_t), F.col("term")) if must_t else F.lit(None)
     ).alias("nm")
@@ -918,8 +933,9 @@ def build_positional_index(
 
     Hot terms are doc_id-range segmented (sampled Zipf-head detection
     like ``compressed_index.encode_tf``) so a head term's positions
-    never serialize through one task; the phrase intersection explodes
-    per (term, segment) row, so segmentation is transparent to readers.
+    never serialize through one task; the serving kernel concatenates a
+    term's segments in doc order, so segmentation is transparent to
+    readers.
     """
     pos = token_positions(docs, id_col, text_col)
 
@@ -1063,213 +1079,433 @@ def write_positional_index(
     return stats
 
 
-def decode_positional(index_df: DataFrame) -> DataFrame:
-    """Executor-side decode of POS_INDEX_SCHEMA rows to
-    ``(term, df, doc_id, positions array<long>)`` — the inverse of the
-    encoder; never collects postings to the driver."""
-    from pyspark.sql.functions import pandas_udf
+# ------------------------------------------------ driver serving kernel
+#
+# Every *_indexed shape is served on the driver, the free-text path's
+# shape (plans/query.py IndexSearcher + operators/wand.py): fetch the
+# query terms' encoded rows, decode with numpy, match, fold BM25, top-k.
+# A request's postings are a few KB; a Spark plan per request paid a
+# pandas-UDF decode, a match shuffle and a doclens join for them.
 
-    dec_type = StructType(
-        [
-            StructField("doc_ids", ArrayType(LongType()), False),
-            StructField("pos_lists", ArrayType(ArrayType(LongType())), False),
-        ]
-    )
+#: encoded columns a fetch reads, in row-tuple order; ``poss`` (the
+#: largest payload) is appended only for the shapes that match on
+#: positions (phrase, slop, near)
+_FETCH_COLS = ("term", "df", "n", "doc_gaps", "tfs")
 
-    @pandas_udf(dec_type)
-    def dec_udf(
-        doc_gaps: pd.Series, tfs: pd.Series, poss: pd.Series, n: pd.Series
-    ) -> pd.DataFrame:
-        out_ids, out_pos = [], []
-        for g, t, p, nn in zip(doc_gaps, tfs, poss, n):
-            nn = int(nn)
-            ids = np.cumsum(varbyte_decode(bytes(g), count=nn).astype(np.int64))
-            tf_arr = varbyte_decode(bytes(t), count=nn).astype(np.int64)
-            flat = varbyte_decode(bytes(p), count=int(tf_arr.sum())).astype(np.int64)
-            plists, off = [], 0
-            for c in tf_arr:
-                plists.append(np.cumsum(flat[off : off + c]).tolist())
-                off += c
-            out_ids.append(ids.tolist())
-            out_pos.append(plists)
-        return pd.DataFrame({"doc_ids": out_ids, "pos_lists": out_pos})
-
-    return (
-        index_df.select(
-            "term", "df", dec_udf("doc_gaps", "tfs", "poss", "n").alias("d")
-        )
-        .select("term", "df", F.explode(F.arrays_zip("d.doc_ids", "d.pos_lists")).alias("p"))
-        .select(
-            "term",
-            "df",
-            F.col("p.doc_ids").alias("doc_id"),
-            F.col("p.pos_lists").alias("positions"),
-        )
-    )
+#: explicit read schema (the bucket partition column last, as Spark
+#: appends it): a per-request read never pays a schema-inference job
+_READ_SCHEMA = StructType(
+    [f for f in POS_INDEX_SCHEMA.fields if f.name != "bucket"]
+    + [StructField("bucket", LongType())]
+)
 
 
-def decode_doc_tfs(index_df: DataFrame) -> DataFrame:
-    """Executor-side decode to ``(term, df, doc_id, tf)`` WITHOUT
-    positions: the ``poss`` column is never selected, so Parquet column
-    pruning skips the (largest) positions payload entirely — the right
-    scan for scoring-only queries (prefix/wildcard/fuzzy/bool), which
-    need tf but not where the tokens sit."""
-    from pyspark.sql.functions import pandas_udf
-
-    dec_type = StructType(
-        [
-            StructField("doc_ids", ArrayType(LongType()), False),
-            StructField("tfs_arr", ArrayType(LongType()), False),
-        ]
-    )
-
-    @pandas_udf(dec_type)
-    def dec_udf(doc_gaps: pd.Series, tfs: pd.Series, n: pd.Series) -> pd.DataFrame:
-        out_ids, out_tfs = [], []
-        for g, t, nn in zip(doc_gaps, tfs, n):
-            nn = int(nn)
-            ids = np.cumsum(varbyte_decode(bytes(g), count=nn).astype(np.int64))
-            tf_arr = varbyte_decode(bytes(t), count=nn).astype(np.int64)
-            out_ids.append(ids.tolist())
-            out_tfs.append(tf_arr.tolist())
-        return pd.DataFrame({"doc_ids": out_ids, "tfs_arr": out_tfs})
-
-    return (
-        index_df.select("term", "df", dec_udf("doc_gaps", "tfs", "n").alias("d"))
-        .select("term", "df", F.explode(F.arrays_zip("d.doc_ids", "d.tfs_arr")).alias("p"))
-        .select(
-            "term",
-            "df",
-            F.col("p.doc_ids").alias("doc_id"),
-            F.col("p.tfs_arr").alias("tf"),
-        )
-    )
+def decode_positional_row(row, positions: bool = True):
+    """numpy inverse of the positional encoder for one fetched row
+    ``(term, df, n, doc_gaps, tfs[, poss])``: ``(doc_ids, tfs, pos)``
+    where ``pos`` holds every occurrence's absolute position, doc-major
+    and ascending within a doc (``None`` when ``positions=False`` — the
+    ``poss`` payload is then never touched)."""
+    n = int(row[2])
+    ids = np.cumsum(varbyte_decode(row[3], count=n).astype(np.int64))
+    tfs = varbyte_decode(row[4], count=n).astype(np.int64)
+    if not positions:
+        return ids, tfs, None
+    # within-doc deltas with each doc's first position absolute: one
+    # running sum, minus the running total where each doc starts
+    flat = varbyte_decode(row[5], count=int(tfs.sum())).astype(np.int64)
+    run = np.cumsum(flat)
+    starts = np.cumsum(tfs) - tfs
+    return ids, tfs, run - np.repeat(run[starts] - flat[starts], tfs)
 
 
-#: per-(session, index_dir, stats.json freshness) serving state:
-#: (stats dict, bucket modulus, postings relation, doclens relation).
-#: Each indexed structured query used to re-read stats.json twice and
-#: re-instantiate both parquet relations PER CALL — per-HTTP-request
-#: driver I/O with none of the caching the main query path has (r5
-#: ADVICE). The freshness token (stats.json mtime_ns+size) invalidates
-#: on rebuild; the applicationId keys out stopped sessions. Guarded by
-#: a lock: StructuredSearchService handlers run on ThreadingHTTPServer
-#: threads, and an unsynchronized evict-while-insert would die with
-#: "dictionary changed size during iteration".
-_SERVE_MEMO: dict[tuple, tuple] = {}
-_SERVE_MEMO_LOCK = None  # created lazily to keep import time clean
-_SERVE_MEMO_CAP = 64
-
-
-def _serve_state(spark: SparkSession, index_dir: str) -> tuple:
-    global _SERVE_MEMO_LOCK
-    if _SERVE_MEMO_LOCK is None:
-        import threading
-
-        _SERVE_MEMO_LOCK = threading.Lock()
-    token = fsio.freshness_token(fsio.join(index_dir, "stats.json"), spark)
-    app = spark.sparkContext.applicationId
-    key = (app, index_dir, token)
-    with _SERVE_MEMO_LOCK:
-        hit = _SERVE_MEMO.get(key)
-    if hit is not None:
-        return hit
-    stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
-    out = (
-        stats,
-        int(stats.get("buckets", TERM_BUCKETS_POS)),
-        spark.read.parquet(f"{index_dir}/postings"),
-        spark.read.parquet(f"{index_dir}/doclens"),
-    )
-    with _SERVE_MEMO_LOCK:
-        # evict only THIS session's superseded generations of the same
-        # dir (another live session's entry for the dir stays valid —
-        # evicting on index_dir alone would make two sessions thrash
-        # each other's cache on every call); a small FIFO cap bounds
-        # growth from dead applications / many index dirs
-        for stale in [
-            k for k in _SERVE_MEMO if k[0] == app and k[1] == index_dir and k != key
-        ]:
-            del _SERVE_MEMO[stale]
-        while len(_SERVE_MEMO) >= _SERVE_MEMO_CAP:
-            del _SERVE_MEMO[next(iter(_SERVE_MEMO))]
-        _SERVE_MEMO[key] = out
-    return out
-
-
-def _index_buckets(index_dir: str, spark: SparkSession | None = None) -> int:
+def _index_buckets(index_dir: str, spark: SparkSession) -> int:
     """The bucket modulus the index dir was written with (stats.json is
     authoritative; pre-buckets-field dirs fall back to the default)."""
-    if spark is not None:
-        return _serve_state(spark, index_dir)[1]
     stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
     return int(stats.get("buckets", TERM_BUCKETS_POS))
 
 
-def _load_posts(
-    spark: SparkSession,
-    index_dir: str,
-    uterms: Sequence[str],
-    buckets: int,
-    with_positions: bool = True,
-) -> DataFrame:
-    """Bucket-partition-pruned, term-pruned decoded postings for the
-    query's terms — never touches postings of non-query terms. Bucket
-    ids come from the driver-side xxhash twin (no Spark job per query —
-    same recipe as ``IndexSearcher``). ``with_positions=False`` decodes
-    only doc_ids + tfs (and never reads the positions column)."""
-    from ..functions.xxhash import term_bucket
+class PositionalPostings:
+    """Driver-side access to a positional index for the serving kernel:
+    the encoded rows of a term set or of a vocabulary predicate, plus
+    the norms.
 
-    bkts = sorted({term_bucket(t, buckets) for t in uterms})
-    idx = (
-        _serve_state(spark, index_dir)[2]
-        .filter(F.col("bucket").isin(bkts) & F.col("term").isin(list(uterms)))
-    )
-    return decode_positional(idx) if with_positions else decode_doc_tfs(idx)
+    ``preload=False`` (scan mode) runs ONE bucket- and term-pruned
+    collect per fetch, over a relation built for that fetch: a rebuilt
+    index at the same path is read as its new generation, never through
+    a cached relation listing deleted files. ``preload=True`` collects
+    every row into a term->rows dict once, with the norms, both charged
+    against one :func:`check_preload_budget` (4 GiB default); a request
+    then runs no Spark job at all."""
 
-
-def _scored_from_tfs(
-    spark: SparkSession,
-    index_dir: str,
-    tf: DataFrame,
-    matched: DataFrame | None,
-    top_k: int,
-    k1: float,
-    b: float,
-    score_terms: Sequence[str] | None = None,
-) -> DataFrame:
-    """BM25 over ``(term, df, doc_id, tf)`` rows with the index's exact
-    df, the doclens sidecar, and stats.json's corpus stats, optionally
-    restricted (left-semi) to ``matched`` doc_ids — the one scoring tail
-    every indexed query shape funnels into.
-
-    When the caller's term set is DRIVER-KNOWN (``score_terms``), the
-    ascending-term float64 fold is computed as a slot-indexed codegen
-    HashAggregate (max-per-slot, then an ordered add where a missing
-    slot contributes +0.0 — bit-identical to the sorted fold over
-    nonnegative contributions). Expansion shapes (prefix/wildcard/fuzzy)
-    keep the generic collect_list fold — their terms live in the plan."""
-    stats, _, _, dl = _serve_state(spark, index_dir)
-    n_docs, avgdl = int(stats["n_docs"]), float(stats["avgdl"])
-
-    from .bm25 import bm25_contrib_expr
-
-    contrib = bm25_contrib_expr("tf", "df", "doc_len", n_docs, avgdl, k1, b)
-    contribs = tf.join(dl, "doc_id").select("doc_id", "term", contrib.alias("contrib"))
-    if matched is not None:
-        contribs = contribs.join(matched, "doc_id", "left_semi")
-    if score_terms:
-        from .bm25 import slot_fold
-
-        uterms = sorted(set(score_terms))
-        slot = F.create_map(
-            *[x for i, t in enumerate(uterms) for x in (F.lit(t), F.lit(i))]
+    def __init__(self, spark: SparkSession, index_dir: str, preload: bool = False):
+        self.spark, self.index_dir = spark, index_dir
+        self._mem: dict[str, list] | None = None
+        self._norms = None
+        if not preload:
+            return
+        self._mem = {}
+        frame = self._frame(None)
+        if frame is None:  # an empty index: no request ever needs norms
+            return
+        frame = frame.select(*_FETCH_COLS, "poss")
+        spent = check_preload_budget(
+            frame, f"positional postings of {index_dir}", DEFAULT_PRELOAD_BUDGET_BYTES
         )
-        rows = contribs.withColumn("_slot", F.element_at(slot, F.col("term")))
-        scored = slot_fold(rows, ["doc_id"], len(uterms))
+        for r in self._collect(frame):
+            self._mem.setdefault(r[0], []).append(r)
+        self._norms = _load_norms(spark, index_dir, DEFAULT_PRELOAD_BUDGET_BYTES - spent)
+
+    def norms(self):
+        """``(doclen, n_docs, avgdl)`` from the shared norms cache (pinned
+        at construction in preload mode)."""
+        if self._norms is not None:
+            return self._norms
+        return _load_norms(self.spark, self.index_dir, DEFAULT_PRELOAD_BUDGET_BYTES)
+
+    def rows(self, terms: Sequence[str], positions: bool = False) -> list[tuple]:
+        """Encoded rows (every segment) of ``terms``. Bucket ids come from
+        the driver-side xxhash twin, as in ``IndexSearcher``."""
+        terms = sorted(set(terms))
+        if self._mem is not None:
+            return [r for t in terms for r in self._mem.get(t, ())]
+        modulus = _index_buckets(self.index_dir, self.spark)
+        bkts = sorted({term_bucket(t, modulus) for t in terms})
+        frame = self._frame(bkts)
+        if frame is None:
+            return []
+        cols = _FETCH_COLS + (("poss",) if positions else ())
+        return self._collect(
+            frame.filter(F.col("bucket").isin(bkts) & F.col("term").isin(terms))
+            .select(*cols)
+        )
+
+    def vocab_rows(self, term_col, pick) -> list[tuple]:
+        """Rows of every vocabulary term ``pick`` (a driver predicate over
+        a term list, returning the admitted terms) admits. Scan mode
+        prunes the scan with ``term_col``, the same predicate as a
+        Column, and never reads positions."""
+        if self._mem is not None:
+            return [r for t in pick(list(self._mem)) for r in self._mem[t]]
+        frame = self._frame(None)
+        if frame is None:
+            return []
+        rows = self._collect(frame.filter(term_col).select(*_FETCH_COLS))
+        keep = set(pick(sorted({r[0] for r in rows})))
+        return [r for r in rows if r[0] in keep]
+
+    def _frame(self, buckets: Sequence[int] | None) -> DataFrame | None:
+        """The postings relation over the listed ``bucket=`` directories
+        (all when ``buckets`` is None; None when none exist). Directories
+        go to the reader in groups at most the session's parallel-listing
+        threshold wide, so file listing stays on the driver instead of
+        launching a listing job per request."""
+        root = fsio.join(self.index_dir, "postings")
+        want = None if buckets is None else {f"bucket={b}" for b in buckets}
+        dirs = sorted(
+            p for p in fsio.listdir(root, self.spark)
+            if (name := p.rstrip("/").rsplit("/", 1)[-1]).startswith("bucket=")
+            and (want is None or name in want)
+        )
+        if not dirs:
+            return None
+        step = int(self.spark.conf.get(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"
+        ))
+        reader = self.spark.read.schema(_READ_SCHEMA).option("basePath", root)
+        parts = [reader.parquet(*dirs[i:i + step]) for i in range(0, len(dirs), step)]
+        return functools.reduce(DataFrame.unionByName, parts)
+
+    @staticmethod
+    def _collect(frame: DataFrame) -> list[tuple]:
+        return [tuple(r) for r in frame.collect()]
+
+
+def _decoded(rows, positions: bool) -> dict:
+    """``term -> (df, doc_ids, tfs, pos)``, a hot term's segments (disjoint
+    doc-id ranges) concatenated in doc order."""
+    by_term: dict[str, list] = {}
+    for r in rows:
+        by_term.setdefault(r[0], []).append((int(r[1]), *decode_positional_row(r, positions)))
+    out = {}
+    for t, segs in by_term.items():
+        segs.sort(key=lambda s: int(s[1][0]))
+        out[t] = (
+            segs[0][0],
+            np.concatenate([s[1] for s in segs]),
+            np.concatenate([s[2] for s in segs]),
+            np.concatenate([s[3] for s in segs]) if positions else None,
+        )
+    return out
+
+
+def _common_docs(post: dict, terms) -> np.ndarray:
+    """Sorted doc ids holding EVERY one of ``terms``."""
+    out = None
+    for t in set(terms):
+        if t not in post:
+            return np.zeros(0, dtype=np.int64)
+        ids = post[t][1]
+        out = ids if out is None else np.intersect1d(out, ids, assume_unique=True)
+    return out
+
+
+def _keyed(post: dict, term: str, docs: np.ndarray, width: int) -> np.ndarray:
+    """``rank(doc) * width + pos`` for every occurrence of ``term`` in
+    ``docs`` (sorted; docs must all hold the term) — one sortable int64
+    per (doc, position), so the matchers below are searchsorted and
+    set operations on flat arrays."""
+    _, ids, tfs, pos = post[term]
+    keep = np.isin(ids, docs, assume_unique=True)
+    rank = np.repeat(np.searchsorted(docs, ids), tfs)
+    return (rank * width + pos)[np.repeat(keep, tfs)]
+
+
+def _width(post: dict, terms, pad: int = 0) -> int:
+    return max(int(post[t][3].max()) for t in set(terms)) + pad + 1
+
+
+def _phrase_docs(post: dict, slots: Sequence[str]) -> np.ndarray:
+    """numpy twin of :func:`_anchor_match`: docs with an anchor ``a``
+    such that slot ``i``'s term sits at ``a + i`` for every slot (a
+    token may serve several slots). Keys are (doc, anchor) pairs,
+    intersected slot by slot; anchors shift by ``m`` to stay positive."""
+    docs = _common_docs(post, slots)
+    if not docs.size:
+        return docs
+    m = len(slots)
+    width = _width(post, slots, m)
+    keys = None
+    for i, t in enumerate(slots):
+        k = _keyed(post, t, docs, width) + (m - i)
+        keys = k if keys is None else np.intersect1d(keys, k, assume_unique=True)
+    return docs[np.unique(keys // width)]
+
+
+def _ordered_docs(post: dict, slots: Sequence[str], window: int) -> np.ndarray:
+    """numpy twin of :func:`_ordered_chain_match`: from every occurrence
+    ``p1`` of the first slot, greedily take each next slot's EARLIEST
+    occurrence after the previous one (exact for existence — a smaller
+    prev admits a superset of continuations) while it stays within
+    ``p1 + window - 1``."""
+    docs = _common_docs(post, slots)
+    if not docs.size:
+        return docs
+    width = _width(post, slots)
+    first = _keyed(post, slots[0], docs, width)
+    rank, p1 = first // width, first % width
+    prev = p1
+    for t in slots[1:]:
+        keys = _keyed(post, t, docs, width)
+        j = np.searchsorted(keys, rank * width + prev, side="right")
+        nxt = keys[np.minimum(j, keys.size - 1)]
+        ok = (j < keys.size) & (nxt // width == rank) & (nxt % width <= p1 + window - 1)
+        rank, p1, prev = rank[ok], p1[ok], (nxt % width)[ok]
+    return docs[np.unique(rank)]
+
+
+def _near_docs(post: dict, uterms: Sequence[str], window: int) -> np.ndarray:
+    """numpy twin of :func:`_min_cover_match`: at every occurrence, each
+    term's latest occurrence at or before it; the doc matches when, with
+    every term seen, the span back to the earliest of them is at most
+    ``window - 1``."""
+    docs = _common_docs(post, uterms)
+    if not docs.size or len(uterms) == 1:
+        return docs
+    width = _width(post, uterms)
+    keyed = [_keyed(post, t, docs, width) for t in uterms]
+    ends = np.concatenate(keyed)
+    rank = ends // width
+    start = ends % width
+    seen = np.ones(ends.size, dtype=bool)
+    for keys in keyed:
+        j = np.searchsorted(keys, ends, side="right") - 1
+        last = keys[np.maximum(j, 0)]
+        seen &= (j >= 0) & (last // width == rank)
+        start = np.minimum(start, last % width)
+    hit = seen & (ends % width - start <= window - 1)
+    return docs[np.unique(rank[hit])]
+
+
+def _bool_docs(post: dict, must_t, score_t, not_t) -> np.ndarray:
+    """numpy twin of :func:`_bool_match_ids`: every must term (or, with
+    none, any scored term) and no must_not term."""
+    if must_t:
+        docs = _common_docs(post, must_t)
     else:
-        scored = sum_in_term_order(contribs)
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
+        docs = np.unique(np.concatenate(
+            [post[t][1] for t in score_t if t in post] or [np.zeros(0, np.int64)]
+        ))
+    bad = [post[t][1] for t in not_t if t in post]
+    return np.setdiff1d(docs, np.concatenate(bad)) if bad else docs
+
+
+def _score(src: PositionalPostings, post: dict, terms, docs, top_k, k1, b):
+    """BM25 over ``terms`` restricted to ``docs`` (None: every posting),
+    with the index's exact df, the norms and stats.json's corpus stats —
+    the one scoring tail every shape funnels into."""
+    parts = []
+    for t in terms:
+        if t in post:
+            df, ids, tfs, _ = post[t]
+            if docs is not None:
+                keep = np.isin(ids, docs, assume_unique=True)
+                ids, tfs = ids[keep], tfs[keep]
+            parts.append((t, df, ids, tfs))
+    if not any(p[2].size for p in parts):
+        return []
+    doclen, n_docs, avgdl = src.norms()
+    return bm25_fold_topk(parts, doclen, n_docs, avgdl, top_k, k1, b)
+
+
+def phrase_hits(src, phrase, top_k=DEFAULT_TOP_K, k1=BM25_K1, b=BM25_B):
+    """``[(doc_id, score)]`` of :func:`phrase_topk` from ``src`` (a
+    :class:`PositionalPostings`), rank ordered."""
+    slots = phrase_terms(phrase)
+    if not slots:
+        return []
+    uterms = sorted(set(slots))
+    post = _decoded(src.rows(uterms, positions=True), positions=True)
+    return _score(src, post, uterms, _phrase_docs(post, slots), top_k, k1, b)
+
+
+def near_hits(src, question, window, top_k=DEFAULT_TOP_K, k1=BM25_K1, b=BM25_B):
+    """:func:`near_topk` from ``src``."""
+    if window < 1:
+        raise ValueError("window must be >= 1")
+    uterms = sorted(set(analyze(question)))
+    if not uterms:
+        return []
+    post = _decoded(src.rows(uterms, positions=True), positions=True)
+    return _score(src, post, uterms, _near_docs(post, uterms, window), top_k, k1, b)
+
+
+def phrase_slop_hits(src, phrase, slop=0, top_k=DEFAULT_TOP_K, k1=BM25_K1, b=BM25_B):
+    """:func:`phrase_slop_topk` from ``src``."""
+    if slop < 0:
+        raise ValueError("slop must be >= 0")
+    slots = phrase_terms(phrase)
+    if not slots:
+        return []
+    uterms = sorted(set(slots))
+    post = _decoded(src.rows(uterms, positions=True), positions=True)
+    docs = _ordered_docs(post, slots, len(slots) + slop)
+    return _score(src, post, uterms, docs, top_k, k1, b)
+
+
+def _expanded_hits(src, term_col, pick, top_k, k1, b, max_expansions):
+    """The transparent multi-term rewrite from ``src``: every vocabulary
+    term ``pick`` admits scores with its own idf; ``max_expansions``
+    keeps the highest-df terms, ties term asc, like :func:`_expanded_topk`."""
+    if max_expansions is not None and max_expansions < 1:
+        raise ValueError("max_expansions must be >= 1")
+    rows = src.vocab_rows(term_col, pick)
+    if max_expansions is not None:
+        dfs = {r[0]: int(r[1]) for r in rows}
+        keep = set(sorted(dfs, key=lambda t: (-dfs[t], t))[:max_expansions])
+        rows = [r for r in rows if r[0] in keep]
+    post = _decoded(rows, positions=False)
+    return _score(src, post, sorted(post), None, top_k, k1, b)
+
+
+def prefix_hits(src, prefix, top_k=DEFAULT_TOP_K, k1=BM25_K1, b=BM25_B,
+                max_expansions=None):
+    """:func:`prefix_topk` from ``src``."""
+    p = prefix.lower()
+    if not _TOKEN_OK.match(p):
+        raise ValueError(f"prefix must be a plain analyzer token: {prefix!r}")
+    return _expanded_hits(
+        src, F.col("term").startswith(p), lambda ts: [t for t in ts if t.startswith(p)],
+        top_k, k1, b, max_expansions,
+    )
+
+
+def wildcard_hits(src, pattern, top_k=DEFAULT_TOP_K, k1=BM25_K1, b=BM25_B,
+                  max_expansions=None):
+    """:func:`wildcard_topk` from ``src``."""
+    p = pattern.lower()
+    if not _WILDCARD_OK.match(p) or set(p) == {"*"}:
+        raise ValueError(f"pattern must be analyzer chars + '*': {pattern!r}")
+    rx = re.compile(".*".join(map(re.escape, p.split("*"))), re.S)
+    return _expanded_hits(
+        src, F.col("term").like(p.replace("*", "%")),
+        lambda ts: [t for t in ts if rx.fullmatch(t)], top_k, k1, b, max_expansions,
+    )
+
+
+def _fuzzy_pick(q: str, max_edits: int):
+    """Driver twin of :func:`_fuzzy_pred` over a term list: the same
+    script rule and length band, then a bounded character-level
+    Levenshtein vectorized across the surviving terms. The DP runs one
+    row per query character and drops a term as soon as its whole row
+    exceeds ``max_edits`` (no later row can come back under it); the
+    NUL padding past a shorter term's end never matches, and the cells
+    it feeds only ever lie right of the cell read for that term."""
+    script = _ASCII_TERM.match if _ASCII_TERM.match(q) else _HANGUL.search
+
+    def pick(terms):
+        terms = [t for t in terms if abs(len(t) - len(q)) <= max_edits and script(t)]
+        if not terms:
+            return []
+        # code points, NUL-padded to the longest term (UTF-32 view)
+        codes = np.array(terms)
+        width = codes.itemsize // 4
+        codes = codes.view(np.uint32).reshape(len(terms), width)
+        lens = np.array([len(t) for t in terms])
+        keep = np.arange(len(terms))
+        prev = np.tile(np.arange(width + 1), (len(terms), 1))
+        for i, ch in enumerate(q, 1):
+            best = np.minimum(prev[:, :-1] + (codes != ord(ch)), prev[:, 1:] + 1)
+            cur = np.empty_like(prev)
+            cur[:, 0] = i
+            for j in range(width):
+                cur[:, j + 1] = np.minimum(best[:, j], cur[:, j] + 1)
+            live = cur.min(axis=1) <= max_edits
+            prev, codes, lens, keep = cur[live], codes[live], lens[live], keep[live]
+        ok = prev[np.arange(keep.size), lens] <= max_edits
+        return [terms[i] for i in keep[ok]]
+
+    return pick
+
+
+def fuzzy_hits(src, term, max_edits=1, top_k=DEFAULT_TOP_K, k1=BM25_K1, b=BM25_B,
+               max_expansions=None):
+    """:func:`fuzzy_topk` from ``src``."""
+    q = term.lower()
+    if not _TOKEN_OK.match(q):
+        raise ValueError(f"fuzzy term must be a plain analyzer token: {term!r}")
+    if max_edits < 0:
+        raise ValueError("max_edits must be >= 0")
+    return _expanded_hits(
+        src, _fuzzy_pred(q, max_edits), _fuzzy_pick(q, max_edits), top_k, k1, b,
+        max_expansions,
+    )
+
+
+def bool_hits(src, must=(), should=(), must_not=(), top_k=DEFAULT_TOP_K,
+              k1=BM25_K1, b=BM25_B):
+    """:func:`bool_topk` from ``src``: one tf-only fetch of the must,
+    should and must_not terms."""
+    must_t, score_t, not_t = _bool_clauses(must, should, must_not)
+    if not score_t:
+        return []
+    post = _decoded(src.rows(sorted(set(score_t) | set(not_t))), positions=False)
+    docs = _bool_docs(post, must_t, score_t, not_t)
+    return _score(src, post, score_t, docs, top_k, k1, b)
+
+
+# ------------------------------------------- index-served DataFrame API
+#
+# The historical entry points keep their signatures: each serves its
+# shape in scan mode and returns the at most top_k result rows as a
+# DataFrame (identical results to the relational twin by construction,
+# pinned by pytest + the shared DuckDB twins). The bucket modulus comes
+# from the index's own stats.json, never from the caller.
+
+
+def _hits_frame(spark: SparkSession, hits) -> DataFrame:
+    return spark.createDataFrame(hits, "doc_id long, score double")
 
 
 def phrase_topk_indexed(
@@ -1280,29 +1516,9 @@ def phrase_topk_indexed(
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
-    """:func:`phrase_topk` served from the persisted positional index —
-    identical results by construction (pinned by pytest + the shared
-    DuckDB twin). The bucket modulus comes from the index's own
-    stats.json, never from the caller.
-
-    Plan: bucket-partition-pruned scan of the phrase terms' postings →
-    executor-side decode → anchor intersection (one shuffle on
-    (doc_id, anchor)) → BM25 from tf=|positions| with the index's exact
-    df and the doclens sidecar."""
-    slots = phrase_terms(phrase)
-    if not slots:
-        return spark.createDataFrame([], "doc_id long, score double")
-    uterms, bkts = sorted(set(slots)), _index_buckets(index_dir, spark)
-    posts = _load_posts(spark, index_dir, uterms, bkts)
-    occ = posts.select("term", "doc_id", F.explode("positions").alias("pos"))
-    matched = _anchor_match(occ, slots, distinct=False)
-    # scoring branch re-reads ONLY doc_gaps+tfs (tf-only decode): the r5
-    # shape consumed the positional decode twice, paying the positions
-    # payload scan + heavy decode in both plan branches
-    tf = _load_posts(spark, index_dir, uterms, bkts, with_positions=False)
-    return _scored_from_tfs(
-        spark, index_dir, tf, matched, top_k, k1, b, score_terms=uterms
-    )
+    """:func:`phrase_topk` served from the persisted positional index."""
+    src = PositionalPostings(spark, index_dir)
+    return _hits_frame(spark, phrase_hits(src, phrase, top_k, k1, b))
 
 
 def near_topk_indexed(
@@ -1314,23 +1530,9 @@ def near_topk_indexed(
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
-    """:func:`near_topk` served from the persisted positional index —
-    same pruned scan + decode as the phrase path, then the SAME
-    :func:`_min_cover_match` over the decoded (doc_id, pos, term)
-    occurrences (one window shuffle on doc_id)."""
-    if window < 1:
-        raise ValueError("window must be >= 1")
-    uterms = sorted(set(analyze(question)))
-    if not uterms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    bkts = _index_buckets(index_dir, spark)
-    posts = _load_posts(spark, index_dir, uterms, bkts)
-    occ = posts.select("term", "doc_id", F.explode("positions").alias("pos"))
-    matched = _min_cover_match(occ, uterms, window, distinct=False)
-    tf = _load_posts(spark, index_dir, uterms, bkts, with_positions=False)
-    return _scored_from_tfs(
-        spark, index_dir, tf, matched, top_k, k1, b, score_terms=uterms
-    )
+    """:func:`near_topk` served from the persisted positional index."""
+    src = PositionalPostings(spark, index_dir)
+    return _hits_frame(spark, near_hits(src, question, window, top_k, k1, b))
 
 
 def phrase_slop_topk_indexed(
@@ -1342,58 +1544,9 @@ def phrase_slop_topk_indexed(
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
-    """:func:`phrase_slop_topk` served from the persisted positional
-    index — pruned scan + decode, then the SAME
-    :func:`_ordered_chain_match` over the decoded occurrences."""
-    if slop < 0:
-        raise ValueError("slop must be >= 0")
-    slots = phrase_terms(phrase)
-    if not slots:
-        return spark.createDataFrame([], "doc_id long, score double")
-    uterms, bkts = sorted(set(slots)), _index_buckets(index_dir, spark)
-    posts = _load_posts(spark, index_dir, uterms, bkts)
-    occ = posts.select("term", "doc_id", F.explode("positions").alias("pos"))
-    matched = _ordered_chain_match(occ, slots, len(slots) + slop, distinct=False)
-    tf = _load_posts(spark, index_dir, uterms, bkts, with_positions=False)
-    return _scored_from_tfs(
-        spark, index_dir, tf, matched, top_k, k1, b, score_terms=uterms
-    )
-
-
-def _vocab_topk_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    term_pred,
-    top_k: int,
-    k1: float,
-    b: float,
-    max_expansions: int | None,
-) -> DataFrame:
-    """Indexed twin of :func:`_expanded_topk`: the vocabulary predicate
-    filters the postings DICTIONARY columns (term, df) directly — no
-    driver-side term collect, no bucket math (a predicate doesn't map to
-    a hash bucket). Postings files are term-sorted in-file, so a prefix
-    predicate prunes row groups via Parquet min/max stats; the
-    positions column is never read (tf-only decode), and only matched
-    rows' doc_gaps/tfs binaries decode.
-
-    ``max_expansions`` keeps the HIGHEST-df expanded terms (ties term
-    asc) exactly like the relational rewrite — computed as a distinct
-    (term, df) top-k and broadcast-semi-joined back, never collected."""
-    if max_expansions is not None and max_expansions < 1:
-        raise ValueError("max_expansions must be >= 1")
-    raw = _serve_state(spark, index_dir)[2].filter(term_pred)
-    if max_expansions is not None:
-        top_terms = (
-            raw.select("term", "df")
-            .distinct()
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(max_expansions)
-            .select("term")
-        )
-        raw = raw.join(F.broadcast(top_terms), "term", "left_semi")
-    tf = decode_doc_tfs(raw)
-    return _scored_from_tfs(spark, index_dir, tf, None, top_k, k1, b)
+    """:func:`phrase_slop_topk` served from the persisted positional index."""
+    src = PositionalPostings(spark, index_dir)
+    return _hits_frame(spark, phrase_slop_hits(src, phrase, slop, top_k, k1, b))
 
 
 def prefix_topk_indexed(
@@ -1405,16 +1558,10 @@ def prefix_topk_indexed(
     b: float = BM25_B,
     max_expansions: int | None = None,
 ) -> DataFrame:
-    """:func:`prefix_topk` served from the persisted positional index —
-    ``startswith`` pushes to the term-sorted postings scan as a
-    contiguous row-group range."""
-    p = prefix.lower()
-    if not _TOKEN_OK.match(p):
-        raise ValueError(f"prefix must be a plain analyzer token: {prefix!r}")
-    return _vocab_topk_indexed(
-        spark, index_dir, F.col("term").startswith(p), top_k, k1, b,
-        max_expansions,
-    )
+    """:func:`prefix_topk` from the persisted index — ``startswith``
+    pushes to the term-sorted postings scan as a row-group range."""
+    src = PositionalPostings(spark, index_dir)
+    return _hits_frame(spark, prefix_hits(src, prefix, top_k, k1, b, max_expansions))
 
 
 def wildcard_topk_indexed(
@@ -1427,15 +1574,9 @@ def wildcard_topk_indexed(
     max_expansions: int | None = None,
 ) -> DataFrame:
     """:func:`wildcard_topk` from the persisted index. A leading ``*``
-    scans the whole dictionary (no row-group prune) but still only the
-    (term, df) columns — the positions payload is never read."""
-    p = pattern.lower()
-    if not _WILDCARD_OK.match(p) or set(p) == {"*"}:
-        raise ValueError(f"pattern must be analyzer chars + '*': {pattern!r}")
-    return _vocab_topk_indexed(
-        spark, index_dir, F.col("term").like(p.replace("*", "%")), top_k,
-        k1, b, max_expansions,
-    )
+    scans the whole dictionary (no row-group prune), never positions."""
+    src = PositionalPostings(spark, index_dir)
+    return _hits_frame(spark, wildcard_hits(src, pattern, top_k, k1, b, max_expansions))
 
 
 def fuzzy_topk_indexed(
@@ -1449,15 +1590,10 @@ def fuzzy_topk_indexed(
     max_expansions: int | None = None,
 ) -> DataFrame:
     """:func:`fuzzy_topk` from the persisted index (same
-    script-consistent expansion predicate over the dictionary)."""
-    q = term.lower()
-    if not _TOKEN_OK.match(q):
-        raise ValueError(f"fuzzy term must be a plain analyzer token: {term!r}")
-    if max_edits < 0:
-        raise ValueError("max_edits must be >= 0")
-    return _vocab_topk_indexed(
-        spark, index_dir, _fuzzy_pred(q, max_edits), top_k, k1, b,
-        max_expansions,
+    script-consistent expansion over the dictionary)."""
+    src = PositionalPostings(spark, index_dir)
+    return _hits_frame(
+        spark, fuzzy_hits(src, term, max_edits, top_k, k1, b, max_expansions)
     )
 
 
@@ -1471,19 +1607,6 @@ def bool_topk_indexed(
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
-    """:func:`bool_topk` served from the persisted positional index.
-    TWO bucket-pruned tf-only scans total: one single-aggregation match
-    pass folding all three clauses (:func:`_bool_match_ids`), one
-    scoring pass over the must+should terms."""
-    must_t, score_t, not_t = _bool_clauses(must, should, must_not)
-    if not score_t:
-        return spark.createDataFrame([], "doc_id long, score double")
-    all_t = sorted(set(score_t) | set(not_t))
-    tf = _load_posts(
-        spark, index_dir, all_t, _index_buckets(index_dir, spark), with_positions=False
-    )
-    match = _bool_match_ids(tf, must_t, score_t, not_t)
-    score_tf = tf.filter(F.col("term").isin(score_t))
-    return _scored_from_tfs(
-        spark, index_dir, score_tf, match, top_k, k1, b, score_terms=score_t
-    )
+    """:func:`bool_topk` served from the persisted positional index."""
+    src = PositionalPostings(spark, index_dir)
+    return _hits_frame(spark, bool_hits(src, must, should, must_not, top_k, k1, b))

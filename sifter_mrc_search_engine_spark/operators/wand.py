@@ -167,44 +167,52 @@ DENSE_POSTINGS_LIMIT = 20_000_000
 DENSE_DOCSPACE_LIMIT = 64_000_000
 
 
-def _dense_topk(rows, query_terms, doclen, n_docs: int, avgdl: float,
-                top_k: int, k1: float, b: float) -> List[Tuple[int, float]]:
-    """Vectorized exact scorer: decode everything, accumulate per-doc in
-    ASCENDING TERM order into a dense float64 array (identical summation
-    order to the oracle and to WAND), numpy top-k with doc_id tie-break.
+def bm25_fold_topk(parts, doclen, n_docs: int, avgdl: float, top_k: int,
+                   k1: float = BM25_K1, b: float = BM25_B) -> List[Tuple[int, float]]:
+    """Exact BM25 top-k over DECODED postings: the one numpy fold every
+    driver-side scorer shares (the dense WAND path, the positional
+    kernel). ``parts`` are ``(term, df, doc_ids, tfs)`` with doc ids
+    unique within a part (a term's salted segments are disjoint parts).
 
-    O(total postings) with no per-doc Python — the winner for in-memory
-    serving when terms are dense and WAND's pruning cannot bite. WAND
-    remains the disk-path kernel (it avoids decoding skipped blocks)."""
-    by_term: dict = {}
-    for r in rows:
-        by_term.setdefault(r["term"], []).append(r)
-    max_doc = max(int(r["max_doc"]) for r in rows)
-    acc = np.zeros(max_doc + 1, dtype=np.float64)
-    seen = np.zeros(max_doc + 1, dtype=bool)
-    for term in sorted(by_term):
-        segs = by_term[term]
-        df = int(segs[0]["df"])
+    Contributions accumulate per doc in ASCENDING TERM order into
+    float64 (identical summation order to the oracle's sorted fold and
+    to WAND), then a numpy top-k with the (score desc, doc_id asc)
+    tie-break. The accumulator is indexed by doc id when the id span is
+    small relative to the postings, by rank among the candidate ids
+    otherwise (sparse or hash-derived id spaces)."""
+    parts = sorted((p for p in parts if p[2].size), key=lambda p: p[0])
+    if not parts:
+        return []
+    all_ids = np.concatenate([p[2] for p in parts])
+    lo, hi = int(all_ids.min()), int(all_ids.max())
+    if lo >= 0 and hi < max(8 * all_ids.size, 1 << 16):
+        doc_of, slots, width = None, all_ids, hi + 1
+    else:
+        doc_of, slots = np.unique(all_ids, return_inverse=True)
+        width = doc_of.size
+    acc = np.zeros(width, dtype=np.float64)
+    seen = np.zeros(width, dtype=bool)
+    off = 0
+    for _term, df, ids, tfs in parts:
+        s = slots[off:off + ids.size]
+        off += ids.size
         idf = float(np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5)))
-        for r in segs:  # salted segments: disjoint doc ranges
-            ids, tfs = decode_postings(
-                gaps=bytes(r["gaps"]), tfs=bytes(r["tfs"]), n=int(r["n"]),
-                skips=bytes(r["skips"]), block_size=int(r["block_size"]),
+        tfs = tfs.astype(np.float64)
+        if isinstance(doclen, np.ndarray):
+            dls = doclen[ids].astype(np.float64)
+        else:
+            dls = np.fromiter(
+                (doclen[int(i)] for i in ids), dtype=np.float64, count=ids.size
             )
-            tfs = tfs.astype(np.float64)
-            if isinstance(doclen, np.ndarray):
-                dls = doclen[ids].astype(np.float64)
-            else:
-                dls = np.fromiter(
-                    (doclen[int(i)] for i in ids), dtype=np.float64, count=ids.size
-                )
-            contrib = idf * tfs * (k1 + 1.0) / (tfs + k1 * ((1.0 - b) + (b * dls) / avgdl))
-            acc[ids] += contrib  # ids unique per term -> plain fancy add
-            seen[ids] = True
+        contrib = idf * tfs * (k1 + 1.0) / (tfs + k1 * ((1.0 - b) + (b * dls) / avgdl))
+        acc[s] += contrib  # ids unique per part -> plain fancy add
+        seen[s] = True
     cand = np.flatnonzero(seen)
     scores = acc[cand]
+    if doc_of is not None:
+        cand = doc_of[cand]
     k = min(top_k, cand.size)
-    if k == 0:
+    if k <= 0:
         return []
     # keep every row tied with the k-th-best score so the doc_id
     # tie-break sees all tied candidates, then lexsort the small set
@@ -213,6 +221,23 @@ def _dense_topk(rows, query_terms, doclen, n_docs: int, avgdl: float,
     cand_ids, cand_scores = cand[mask], scores[mask]
     order = np.lexsort((cand_ids, -cand_scores))[:k]
     return [(int(cand_ids[i]), float(cand_scores[i])) for i in order]
+
+
+def _dense_topk(rows, doclen, n_docs: int, avgdl: float,
+                top_k: int, k1: float, b: float) -> List[Tuple[int, float]]:
+    """Vectorized exact scorer: decode everything, then
+    :func:`bm25_fold_topk`. O(total postings) with no per-doc Python —
+    the winner for in-memory serving when terms are dense and WAND's
+    pruning cannot bite. WAND remains the disk-path kernel (it avoids
+    decoding skipped blocks)."""
+    parts = []
+    for r in rows:
+        ids, tfs = decode_postings(
+            gaps=bytes(r["gaps"]), tfs=bytes(r["tfs"]), n=int(r["n"]),
+            skips=bytes(r["skips"]), block_size=int(r["block_size"]),
+        )
+        parts.append((r["term"], int(r["df"]), ids, tfs))
+    return bm25_fold_topk(parts, doclen, n_docs, avgdl, top_k, k1, b)
 
 
 def wand_topk(
@@ -251,7 +276,7 @@ def wand_topk(
         if method == "dense" or (
             total_n <= DENSE_POSTINGS_LIMIT and max_doc <= DENSE_DOCSPACE_LIMIT
         ):
-            return _dense_topk(rows, query_terms, doclen, n_docs, avgdl, top_k, k1, b)
+            return _dense_topk(rows, doclen, n_docs, avgdl, top_k, k1, b)
 
     cursors = []
     for r in rows:

@@ -5,11 +5,20 @@ The reference's front door accepts only free-text questions
 ``question`` param; search_functions.py:82-97 builds one bool/should
 match). The structured query family — phrase, slop, NEAR, prefix,
 wildcard, fuzzy, boolean — is implemented in
-:mod:`..operators.positional` with both a relational and an
-index-served form; this module is the thin dispatch layer that makes
-the INDEX-SERVED forms reachable from the HTTP front door with the same
-validation conventions as the free-text route (400 on bad input, never
-a dropped connection).
+:mod:`..operators.positional` with a relational form (the DuckDB-oracled
+contract) and a driver-side serving kernel; this module holds the
+serving state and makes the kernel reachable from the HTTP front door
+with the same validation conventions as the free-text route (400 on bad
+input, never a dropped connection).
+
+A request never plans a Spark query. It fetches the query terms'
+encoded postings, decodes them with numpy, matches, folds BM25 and takes
+the top-k on the driver — the free-text path's shape
+(:class:`..plans.query.IndexSearcher`). ``preload=True`` reads the
+postings from a term->rows dict collected once at start (budget-checked
+with the norms), so a request runs no Spark job; otherwise each request
+runs one bucket- and term-pruned collect that reads positions only for
+phrase, slop and near.
 
 Every request is a JSON object with a ``type`` discriminator; the knob
 names match the operator signatures one-to-one so the HTTP surface and
@@ -44,10 +53,12 @@ def _as_str_list(v: Any, name: str) -> list[str]:
 
 
 class StructuredSearchService:
-    """Dispatches structured query dicts to the index-served operators.
+    """Dispatches structured query dicts to the positional serving kernel.
 
     ``index_dir`` is a positional index written by
-    :func:`..operators.positional.write_positional_index`; results are
+    :func:`..operators.positional.write_positional_index`; ``preload``
+    selects the serving mode (see the module docstring and
+    :class:`..operators.positional.PositionalPostings`). Results are
     ``{"hits": [{"doc_id": int, "score": float}, ...]}`` in engine rank
     order (score desc, doc_id asc — the repo-wide tie-break)."""
 
@@ -63,9 +74,8 @@ class StructuredSearchService:
         "bool": (),
     }
 
-    def __init__(self, spark: SparkSession, index_dir: str):
-        self.spark = spark
-        self.index_dir = index_dir
+    def __init__(self, spark: SparkSession, index_dir: str, preload: bool = False):
+        self.postings = P.PositionalPostings(spark, index_dir, preload=preload)
 
     def _int(self, params: dict, key: str, default: int | None) -> int | None:
         # an explicit JSON null means "use the default" — returning None
@@ -96,39 +106,38 @@ class StructuredSearchService:
         if not (1 <= top_k <= MAX_TOP_K):
             raise ValidationError(f"top_k must be in [1, {MAX_TOP_K}]")
 
-        spark, d = self.spark, self.index_dir
+        src = self.postings
         try:
             if qtype == "phrase":
-                out = P.phrase_topk_indexed(spark, d, params["phrase"], top_k=top_k)
+                hits = P.phrase_hits(src, params["phrase"], top_k=top_k)
             elif qtype == "slop":
-                out = P.phrase_slop_topk_indexed(
-                    spark, d, params["phrase"],
-                    slop=self._int(params, "slop", 0), top_k=top_k,
+                hits = P.phrase_slop_hits(
+                    src, params["phrase"], slop=self._int(params, "slop", 0), top_k=top_k
                 )
             elif qtype == "near":
-                out = P.near_topk_indexed(
-                    spark, d, params["question"],
-                    window=self._int(params, "window", 3), top_k=top_k,
+                hits = P.near_hits(
+                    src, params["question"], window=self._int(params, "window", 3),
+                    top_k=top_k,
                 )
             elif qtype == "prefix":
-                out = P.prefix_topk_indexed(
-                    spark, d, params["prefix"], top_k=top_k,
+                hits = P.prefix_hits(
+                    src, params["prefix"], top_k=top_k,
                     max_expansions=self._int(params, "max_expansions", None),
                 )
             elif qtype == "wildcard":
-                out = P.wildcard_topk_indexed(
-                    spark, d, params["pattern"], top_k=top_k,
+                hits = P.wildcard_hits(
+                    src, params["pattern"], top_k=top_k,
                     max_expansions=self._int(params, "max_expansions", None),
                 )
             elif qtype == "fuzzy":
-                out = P.fuzzy_topk_indexed(
-                    spark, d, params["term"],
-                    max_edits=self._int(params, "max_edits", 1), top_k=top_k,
+                hits = P.fuzzy_hits(
+                    src, params["term"], max_edits=self._int(params, "max_edits", 1),
+                    top_k=top_k,
                     max_expansions=self._int(params, "max_expansions", None),
                 )
             else:  # bool
-                out = P.bool_topk_indexed(
-                    spark, d,
+                hits = P.bool_hits(
+                    src,
                     must=_as_str_list(params.get("must"), "must"),
                     should=_as_str_list(params.get("should"), "should"),
                     must_not=_as_str_list(params.get("must_not"), "must_not"),
@@ -137,8 +146,7 @@ class StructuredSearchService:
         except ValueError as e:
             # operator-level validation (bad slop/window/pattern/edits)
             raise ValidationError(str(e))
-        hits = [
-            {"doc_id": int(r["doc_id"]), "score": float(r["score"])}
-            for r in out.collect()
-        ]
-        return {"type": qtype, "hits": hits}
+        return {
+            "type": qtype,
+            "hits": [{"doc_id": d, "score": s} for d, s in hits],
+        }

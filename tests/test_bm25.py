@@ -78,3 +78,19 @@ def test_postings_sorted_and_df_consistent(docs):
         assert ids == sorted(ids)
         assert row["df"] == len(ids) == df_exp[row["term"]]
         assert 0 <= row["bucket"] < 64
+
+
+def test_slot_fold_sums_duplicate_slot_rows_like_score_fold(spark):
+    # duplicate (keys, slot) rows must SUM (as score_fold does), never
+    # keep one of them; the contributions are exact binary fractions so
+    # any summation order gives the same float
+    from sifter_mrc_search_engine_spark.operators.bm25 import score_fold, slot_fold
+
+    rows = [
+        (1, "a", 0, 0.5), (1, "a", 0, 0.25), (1, "b", 1, 1.0),
+        (2, "b", 1, 2.0), (2, "b", 1, 0.125), (3, "a", 0, 4.0),
+    ]
+    frame = spark.createDataFrame(rows, "doc_id long, term string, _slot int, contrib double")
+    got = {r["doc_id"]: r["score"] for r in slot_fold(frame, ["doc_id"], 2).collect()}
+    want = {r["doc_id"]: r["score"] for r in score_fold(frame, ["doc_id"]).collect()}
+    assert got == want == {1: 1.75, 2: 2.125, 3: 4.0}

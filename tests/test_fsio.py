@@ -135,3 +135,47 @@ def test_streaming_segments_on_remote_style_dir(spark, tmp_path):
     assert segs, "no committed segments discovered on the file:// dir"
     hits = MultiSegmentSearcher(spark, idx, buckets=4).search("alpha", top_k=5)
     assert len(hits) == 5
+
+
+class IOException(Exception):
+    """Stands in for a converted java.io.IOException (classified by name)."""
+
+
+class _JavaExc:
+    """Minimal py4j-style JVM exception: class name, message, cause."""
+
+    def __init__(self, name, msg, cause=None):
+        self._name, self._msg, self._cause = name, msg, cause
+
+    def getClass(self):
+        return self
+
+    def getName(self):
+        return self._name
+
+    def getMessage(self):
+        return self._msg
+
+    def getCause(self):
+        return self._cause
+
+
+def test_no_append_classifier_matches_append_not_supported_by_class():
+    # several Hadoop stores raise IOException("Append is not supported by
+    # <FileSystemClass>"): a no-append store, so the manifest protocol
+    # may take the read+rewrite fallback
+    no_append = fsio._is_no_append_error
+    assert no_append(IOException("Append is not supported by ChecksumFileSystem"))
+    assert no_append(IOException("Not supported"))
+    wrapped = RuntimeError("An error occurred while calling o42.append")
+    wrapped.java_exception = _JavaExc(
+        "org.apache.spark.SparkException", "wrapper",
+        _JavaExc("java.io.IOException",
+                 "Append is not supported by org.apache.hadoop.fs.RawLocalFileSystem"),
+    )
+    assert no_append(wrapped)
+    # the message only STARTING a plain IOException counts: a transient
+    # error that merely contains the phrase, or the phrase on another
+    # class, must re-raise instead of rewriting the manifest
+    assert not no_append(IOException("lease recovery: append is not supported yet"))
+    assert not no_append(RuntimeError("Append is not supported by ChecksumFileSystem"))

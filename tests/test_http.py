@@ -209,10 +209,12 @@ def sdoor(spark, tmp_path_factory):
     P.write_positional_index(pages, posidx)
     first = pages.orderBy("doc_id").select("text").first()["text"].lower().split()
     svc = InferenceService(object())  # inference route unused here
-    d = HttpFrontDoor(
-        svc, structured=StructuredSearchService(spark, posidx)
-    ).start()
+    # preloaded, as jobs/serve_http.py --preload serves it
+    structured = StructuredSearchService(spark, posidx, preload=True)
+    d = HttpFrontDoor(svc, structured=structured).start()
     d._pages = pages
+    d._posidx = posidx
+    d._structured = structured
     d._phrase = f"{first[0]} {first[1]}"
     yield d
     d.stop()
@@ -296,3 +298,100 @@ def test_structured_route_null_knobs(sdoor):
 def test_structured_route_unhashable_type_is_400(sdoor):
     code, out = _structured(sdoor, {"type": ["phrase"], "phrase": "a b"})
     assert code == 400 and "type" in out["detail"]
+
+
+def _bodies(phrase):
+    """One request per structured type."""
+    w = phrase.split()[0]
+    return [
+        {"type": "phrase", "phrase": phrase},
+        {"type": "slop", "phrase": phrase, "slop": 2},
+        {"type": "near", "question": phrase, "window": 4},
+        {"type": "prefix", "prefix": w[:2]},
+        {"type": "wildcard", "pattern": w[:2] + "*"},
+        {"type": "fuzzy", "term": w, "max_edits": 1},
+        {"type": "bool", "must": [w], "should": [phrase.split()[1]], "must_not": ["zzz"]},
+    ]
+
+
+def _relational(pages, body):
+    import sifter_mrc_search_engine_spark.operators.positional as P
+
+    t = body["type"]
+    if t == "phrase":
+        return P.phrase_topk(pages, body["phrase"])
+    if t == "slop":
+        return P.phrase_slop_topk(pages, body["phrase"], slop=body["slop"])
+    if t == "near":
+        return P.near_topk(pages, body["question"], body["window"])
+    if t == "prefix":
+        return P.prefix_topk(pages, body["prefix"])
+    if t == "wildcard":
+        return P.wildcard_topk(pages, body["pattern"])
+    if t == "fuzzy":
+        return P.fuzzy_topk(pages, body["term"], body["max_edits"])
+    return P.bool_topk(pages, body["must"], body["should"], body["must_not"])
+
+
+def test_structured_preload_and_scan_match_relational_twins(spark, sdoor):
+    from sifter_mrc_search_engine_spark.plans.structured import (
+        StructuredSearchService,
+    )
+
+    scan = StructuredSearchService(spark, sdoor._posidx)
+    for body in _bodies(sdoor._phrase):
+        pre = sdoor._structured.search(body)["hits"]
+        assert pre, body
+        # one kernel over the same encoded rows: bit-identical
+        assert scan.search(body)["hits"] == pre, body
+        want = [
+            (r["doc_id"], round(r["score"], 4))
+            for r in _relational(sdoor._pages, body).collect()
+        ]
+        assert [(h["doc_id"], round(h["score"], 4)) for h in pre] == want, body
+
+
+def _jobs_for(spark, run) -> int:
+    """Spark jobs ``run`` starts on this thread."""
+    import uuid as _uuid
+
+    sc = spark.sparkContext
+    group = f"structured-{_uuid.uuid4().hex}"
+    sc.setJobGroup(group, "structured request")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_structured_request_spark_jobs(spark, sdoor):
+    # preload mode: no Spark job per request, any type
+    from sifter_mrc_search_engine_spark.plans.structured import (
+        StructuredSearchService,
+    )
+
+    for body in _bodies(sdoor._phrase):
+        assert _jobs_for(spark, lambda: sdoor._structured.search(body)) == 0, body
+    # scan mode: at most the one pruned collect per request (after the
+    # first request's per-generation norms load)
+    scan = StructuredSearchService(spark, sdoor._posidx)
+    scan.search(_bodies(sdoor._phrase)[0])
+    for body in _bodies(sdoor._phrase):
+        assert _jobs_for(spark, lambda: scan.search(body)) == 1, body
+
+
+def test_structured_preload_refuses_over_budget(spark, sdoor, monkeypatch):
+    from sifter_mrc_search_engine_spark.operators import compressed_index as C
+    from sifter_mrc_search_engine_spark.plans.structured import (
+        StructuredSearchService,
+    )
+
+    monkeypatch.setattr(
+        C, "estimate_collect_bytes", lambda df: C.DEFAULT_PRELOAD_BUDGET_BYTES + 1
+    )
+    with pytest.raises(C.PreloadBudgetExceeded, match="positional postings"):
+        StructuredSearchService(spark, sdoor._posidx, preload=True)

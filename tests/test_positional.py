@@ -3,6 +3,7 @@ index serving path — each *_topk cross-checked against its DuckDB twin on
 the same rows (the driver-gate shape) and against hand-computed fixtures."""
 
 import duckdb
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -204,7 +205,7 @@ def test_fuzzy_topk(docs):
         P.sql_fuzzy_topk("ze'ta")
 
 
-def test_fuzzy_script_consistency(spark):
+def test_fuzzy_script_consistency(spark, tmp_path):
     # engine is CHARACTER-level on Hangul (가나→가다 = 1 edit) and
     # script-consistent: ASCII queries never expand to Hangul-bearing
     # terms (where DuckDB's byte-based levenshtein would diverge)
@@ -226,6 +227,12 @@ def test_fuzzy_script_consistency(spark):
     # Hangul query has no SQL twin — refuses loudly
     with pytest.raises(ValueError, match="ASCII"):
         P.sql_fuzzy_topk("가나")
+    # the indexed path's driver-side expansion keeps the same script
+    # rule and character-level distance
+    path = str(tmp_path / "posidx")
+    P.write_positional_index(docs, path)
+    for q, want in [("가나", got), ("ab", got2)]:
+        assert _ids(P.fuzzy_topk_indexed(spark, path, q, max_edits=1)) == want, q
 
 
 # --------------------------------------------------------------- boolean
@@ -261,11 +268,14 @@ def test_bool_topk(docs):
 
 
 def test_positional_codec_roundtrip(spark, docs):
+    # the encoder against the serving kernel's numpy decoder
     idx = P.build_positional_index(docs)
-    back = P.decode_positional(idx)
-    got = {
-        (r["term"], r["doc_id"]): list(r["positions"]) for r in back.collect()
-    }
+    got = {}
+    for r in idx.select("term", "df", "n", "doc_gaps", "tfs", "poss").collect():
+        ids, tfs, pos = P.decode_positional_row(tuple(r))
+        assert ids.size == r["n"] and int(tfs.sum()) == pos.size
+        for d, p in zip(ids, np.split(pos, np.cumsum(tfs)[:-1])):
+            got[(r["term"], int(d))] = p.tolist()
     want_rows = P.token_positions(docs).collect()
     want = {}
     for r in want_rows:
@@ -323,14 +333,38 @@ def test_near_topk_indexed_parity(spark, docs, tmp_path):
         P.near_topk_indexed(spark, path, "alpha", 0)
 
 
-def test_phrase_indexed_scan_is_bucket_pruned(spark, docs, tmp_path):
+def _fetch_plans(monkeypatch, run):
+    """Formatted physical plans of every scan-mode fetch ``run`` makes:
+    the fetch relation is the one Spark query an indexed request plans
+    (its returned DataFrame is just the collected top-k rows)."""
+    plans = []
+    collect = P.PositionalPostings._collect
+
+    def spy(frame):
+        plans.append(frame._sc._jvm.PythonSQLUtils.explainString(
+            frame._jdf.queryExecution(), "formatted"
+        ))
+        return collect(frame)
+
+    monkeypatch.setattr(P.PositionalPostings, "_collect", staticmethod(spy))
+    run()
+    monkeypatch.undo()
+    return plans
+
+
+def test_phrase_indexed_scan_is_bucket_pruned(spark, docs, tmp_path, monkeypatch):
     path = str(tmp_path / "posidx")
     P.write_positional_index(docs, path)
-    q = P.phrase_topk_indexed(spark, path, "alpha beta")
-    plan = q._sc._jvm.PythonSQLUtils.explainString(
-        q._jdf.queryExecution(), "formatted"
+    plans = _fetch_plans(
+        monkeypatch, lambda: P.phrase_topk_indexed(spark, path, "alpha beta")
     )
-    assert "PartitionFilters: [bucket" in plan, plan[:2000]
+    assert len(plans) == 1, plans
+    assert "PartitionFilters: [bucket" in plans[0], plans[0][:2000]
+    # phrase matching is the one place positions are read
+    assert any(
+        ln.strip().startswith("ReadSchema:") and "poss" in ln
+        for ln in plans[0].splitlines()
+    ), plans[0][:2000]
 
 
 def test_indexed_serving_reads_bucket_modulus_from_stats(spark, docs, tmp_path):
@@ -431,26 +465,49 @@ def test_indexed_expansion_caps_and_edges(spark, docs, tmp_path):
         P.wildcard_topk_indexed(spark, path, "**")
 
 
-def test_vocab_scan_never_reads_positions(spark, docs, tmp_path):
+def test_vocab_scan_never_reads_positions(spark, docs, tmp_path, monkeypatch):
     # the scoring-only shapes must leave the positions payload on disk:
-    # ReadSchema of the postings scan excludes `poss`
+    # ReadSchema of the postings fetch excludes `poss`
     path = str(tmp_path / "posidx")
     P.write_positional_index(docs, path)
-    for q in [
-        P.prefix_topk_indexed(spark, path, "alpha"),
-        P.bool_topk_indexed(spark, path, must=["alpha"]),
+    for run in [
+        lambda: P.prefix_topk_indexed(spark, path, "alpha"),
+        lambda: P.bool_topk_indexed(spark, path, must=["alpha"]),
     ]:
-        plan = q._sc._jvm.PythonSQLUtils.explainString(
-            q._jdf.queryExecution(), "formatted"
-        )
+        plans = _fetch_plans(monkeypatch, run)
+        assert len(plans) == 1, plans
         # the postings scan is the one reading the codec columns
         scans = [
-            ln for ln in plan.splitlines()
+            ln for ln in plans[0].splitlines()
             if ln.strip().startswith("ReadSchema:") and "doc_gaps" in ln
         ]
-        assert scans, plan[:2000]
+        assert scans, plans[0][:2000]
         for ln in scans:
             assert "poss" not in ln, ln
+
+
+def test_scan_mode_reads_the_rebuilt_generation(spark, docs, tmp_path):
+    # a scan-mode source held ACROSS a rebuild at the same path answers
+    # from the new generation: no relation (listing deleted files) or
+    # stale norms outlive the rebuild
+    from sifter_mrc_search_engine_spark.plans.structured import (
+        StructuredSearchService,
+    )
+
+    path = str(tmp_path / "posidx")
+    P.write_positional_index(docs, path)
+    svc = StructuredSearchService(spark, path)
+    body = {"type": "phrase", "phrase": "alpha beta"}
+    first = svc.search(body)["hits"]
+    assert {h["doc_id"] for h in first} == {1, 2, 5}
+    other = spark.createDataFrame(
+        [(11, "alpha beta gamma"), (12, "beta alpha"), (13, "x alpha beta alpha beta")],
+        "doc_id long, text string",
+    )
+    P.write_positional_index(other, path)
+    again = [(h["doc_id"], round(h["score"], 4)) for h in svc.search(body)["hits"]]
+    assert again == _rows(P.phrase_topk(other, "alpha beta"))
+    assert {d for d, _ in again} == {11, 13}
 
 
 def test_oracle_parity_with_zero_token_doc(spark):

@@ -58,7 +58,6 @@ def main() -> None:
 
     # index-served plans need an index on disk
     idx_dir = tempfile.mkdtemp(prefix="r06_explain_idx_")
-    pos_dir = tempfile.mkdtemp(prefix="r06_explain_pos_")
     try:
         from sifter_mrc_search_engine_spark.plans.checkpoint import (
             build_index_resumable,
@@ -70,12 +69,8 @@ def main() -> None:
         batch = ["the fast query", "spark join merge table"] * 3
         save("wand_batch", searcher.search_many(batch, 10))
         save("batch_relational", searcher.search_many_relational(batch, 10))
-
-        pos.write_positional_index(docs, pos_dir)
-        save("pos_phrase_indexed", pos.phrase_topk_indexed(spark, pos_dir, "part filter"))
     finally:
         shutil.rmtree(idx_dir, ignore_errors=True)
-        shutil.rmtree(pos_dir, ignore_errors=True)
     spark.stop()
 
 
