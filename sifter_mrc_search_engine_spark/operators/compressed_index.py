@@ -30,18 +30,22 @@ because avgdl/N are fixed by the corpus stats that precede encoding.
 
 from __future__ import annotations
 
+import functools
 import json
 import threading
+from typing import NamedTuple, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     DoubleType,
     IntegerType,
     LongType,
+    MapType,
     StringType,
     StructField,
     StructType,
@@ -85,40 +89,46 @@ class PreloadBudgetExceeded(RuntimeError):
     """Raised instead of letting ``collect()`` OOM the driver."""
 
 
-def estimate_collect_bytes(df: DataFrame) -> int:
-    """Driver-memory estimate for ``df.collect()``: one column-pruned
-    aggregate summing every variable-width payload plus a per-row,
-    per-field object overhead. Binary/string columns are measured with
+def estimate_collect_bytes(df: DataFrame, *more: DataFrame) -> int:
+    """Driver-memory estimate for ``df.collect()`` (plus the collects of
+    ``more`` frames, in the same job): one column-pruned aggregate per
+    frame summing every variable-width payload plus a per-row, per-field
+    object overhead. Binary/string columns are measured with
     ``octet_length``; nested columns (array/map/struct — a silent
     near-zero estimate there would defeat the guard) through their JSON
     serialization, a same-order proxy for the collected Row objects.
     Deliberately cheap relative to the collect it guards (an agg
     streams; a collect materializes)."""
-    from pyspark.sql.types import (
-        ArrayType as _A,
-        BinaryType as _B,
-        MapType as _M,
-        StringType as _S,
-        StructType as _T,
-    )
+    parts = []
+    for frame in (df, *more):
+        blob = F.lit(0).cast("long")
+        for fld in frame.schema.fields:
+            if isinstance(fld.dataType, (BinaryType, StringType)):
+                blob = blob + F.coalesce(
+                    F.octet_length(F.col(fld.name)).cast("long"), F.lit(0)
+                )
+            elif isinstance(fld.dataType, (ArrayType, MapType, StructType)):
+                blob = blob + F.coalesce(
+                    F.octet_length(F.to_json(F.col(fld.name))).cast("long"),
+                    F.lit(0),
+                )
+        # ~24 bytes per scalar field (Python object + Row slot) + 64/row
+        per_row = F.count(F.lit(1)) * (24 * len(frame.schema.fields) + 64)
+        parts.append(frame.agg((per_row + F.coalesce(F.sum(blob), F.lit(0))).alias("est")))
+    rows = functools.reduce(DataFrame.unionByName, parts).collect()
+    return sum(int(r["est"]) for r in rows)
 
-    blob = F.lit(0).cast("long")
-    for fld in df.schema.fields:
-        if isinstance(fld.dataType, (_B, _S)):
-            blob = blob + F.coalesce(
-                F.octet_length(F.col(fld.name)).cast("long"), F.lit(0)
-            )
-        elif isinstance(fld.dataType, (_A, _M, _T)):
-            blob = blob + F.coalesce(
-                F.octet_length(F.to_json(F.col(fld.name))).cast("long"),
-                F.lit(0),
-            )
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"), F.sum(blob).alias("b")
-    ).collect()[0]
-    n, b = int(row["n"] or 0), int(row["b"] or 0)
-    # ~24 bytes per scalar field (Python object + Row slot) + 64/row
-    return n * (24 * len(df.schema.fields) + 64) + b
+
+def _charge(est: int, what: str, budget_bytes: int | None) -> int:
+    if budget_bytes is not None and est > budget_bytes:
+        raise PreloadBudgetExceeded(
+            f"refusing to preload {what}: estimated {est:,} bytes of driver "
+            f"memory exceeds the remaining {budget_bytes:,}-byte budget. "
+            f"Serve this index with preload off (bucket-pruned scans / "
+            f"norms='join'), or raise preload_budget_bytes if the driver "
+            f"really has the headroom."
+        )
+    return est
 
 
 def check_preload_budget(
@@ -132,91 +142,138 @@ def check_preload_budget(
     charge them against one budget (pass ``budget - spent_so_far``)."""
     if budget_bytes is None:
         return 0
-    est = estimate_collect_bytes(df)
-    if est > budget_bytes:
-        raise PreloadBudgetExceeded(
-            f"refusing to preload {what}: estimated {est:,} bytes of driver "
-            f"memory exceeds the remaining {budget_bytes:,}-byte budget. "
-            f"Serve this index with preload off (bucket-pruned scans / "
-            f"norms='join'), or raise preload_budget_bytes if the driver "
-            f"really has the headroom."
-        )
-    return est
+    return _charge(estimate_collect_bytes(df), what, budget_bytes)
 
 
-#: driver-resident norms per (index_dir, stats.json freshness) — the ONE
-#: norms cache every driver-side scorer shares (WAND, the positional
-#: kernel). Guarded by a lock: HTTP handler threads load and evict
-#: concurrently, and an unsynchronized evict-while-insert dies with
-#: "dictionary changed size during iteration".
-_DOCLEN_CACHE: dict[tuple, tuple] = {}
-_DOCLEN_LOCK = threading.Lock()
+def read_bucketed(
+    spark, root: str, schema: StructType, buckets: "Sequence[int] | None" = None
+) -> DataFrame | None:
+    """The ``bucket=``-partitioned table at ``root`` over the listed bucket
+    dirs (all when ``buckets`` is None; None when none exist), read with
+    the table's ``schema`` (bucket moved last, as Spark appends it) in
+    groups at most the parallel-listing threshold wide: no inference job,
+    and file listing stays on the driver."""
+    want = None if buckets is None else {f"bucket={b}" for b in buckets}
+    dirs = sorted(
+        p for p in fsio.listdir(root, spark)
+        if (name := p.rstrip("/").rsplit("/", 1)[-1]).startswith("bucket=")
+        and (want is None or name in want)
+    )
+    if not dirs:
+        return None
+    step = int(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"
+    ))
+    cols = sorted(schema.fields, key=lambda f: f.name == "bucket")
+    reader = spark.read.schema(StructType(cols)).option("basePath", root)
+    parts = [reader.parquet(*dirs[i:i + step]) for i in range(0, len(dirs), step)]
+    return functools.reduce(DataFrame.unionByName, parts)
+
+
+class SegmentReader(NamedTuple):
+    """One committed index dir (a stream segment, a compacted index or a
+    fresh build: one layout) loaded to the driver; immutable, so shared by
+    every searcher on the unchanged dir. ``postings``: term -> INDEX_SCHEMA
+    rows (None: norms only); ``bytes``: the estimate the load charged."""
+
+    stats: dict
+    doclen: "np.ndarray | dict"
+    doc_ids: np.ndarray  # sorted, for cross-segment overlap checks
+    bytes: int
+    postings: "dict[str, list[dict]] | None" = None
+
+
+#: driver-resident readers per (index_dir, commit markers' freshness): the
+#: ONE cache every driver-side scorer shares. Guarded by a lock: HTTP
+#: handler threads load and evict concurrently, and an unsynchronized
+#: evict-while-insert dies with "dictionary changed size during iteration".
+_READERS: dict[tuple, SegmentReader] = {}
+_READERS_LOCK = threading.Lock()
 
 
 def invalidate_norms_cache(index_dir: str | None = None) -> None:
-    """Drop cached norms for ``index_dir`` (or all). Build/compaction
-    paths need not call this — the cache key includes the stats.json
-    freshness token (mtime+size), so a rebuilt index at the same path
-    misses naturally."""
-    with _DOCLEN_LOCK:
-        for k in [k for k in _DOCLEN_CACHE if index_dir is None or k[0] == index_dir]:
-            del _DOCLEN_CACHE[k]
+    """Drop cached readers (norms and postings) of ``index_dir`` (or
+    all). Build/compaction paths need not call this — the cache key
+    includes the commit markers' freshness tokens (mtime+size), so a
+    rebuilt index at the same path misses naturally."""
+    with _READERS_LOCK:
+        for k in [k for k in _READERS if index_dir is None or k[0] == index_dir]:
+            del _READERS[k]
+
+
+def evict_readers(parent: str, keep: "Sequence[str]") -> None:
+    """Drop cached readers of dirs directly under ``parent`` not in ``keep``."""
+    with _READERS_LOCK:
+        for k in [k for k in _READERS if k[0].rsplit("/", 1)[0] == parent]:
+            if k[0] not in keep:
+                del _READERS[k]
+
+
+def open_reader(
+    spark, index_dir: str, budget_bytes: int | None = None, postings: bool = True
+) -> SegmentReader:
+    """The cached :class:`SegmentReader` of ``index_dir`` (``postings=False``:
+    norms only), keyed by the freshness of the files whose rewrite makes a
+    new generation: a segment's commit marker, a build's manifest, stats.json.
+    The load is charged against ``budget_bytes``: a miss runs ONE estimate
+    job over the frames it then collects (explicit schemas: no inference or
+    listing job); a hit re-charges the recorded estimate without a job, so
+    a budget refuses a dir cached or not. ``None`` disables the check."""
+    marks = ("_SEGMENT_COMMITTED", "_manifest.jsonl", "stats.json")
+    key = (index_dir, *(
+        fsio.freshness_token(p, spark) if fsio.exists(p, spark) else None
+        for p in (fsio.join(index_dir, m) for m in marks)
+    ))
+    with _READERS_LOCK:
+        hit = _READERS.get(key)
+    what = f"{'postings and ' if postings else ''}doclens of {index_dir}"
+    if hit is not None and (hit.postings is not None or not postings):
+        _charge(hit.bytes, what, budget_bytes)
+        return hit
+    # a miss, or a norms-only hit that now needs its postings too
+    doclens = None if hit else spark.read.schema("doc_id long, doc_len long").parquet(
+        f"{index_dir}/doclens"
+    )
+    # files written before the blockmaxtf column surface it null, which
+    # the WAND cursor treats as "no block metadata"
+    post = read_bucketed(
+        spark, fsio.join(index_dir, "postings"), INDEX_SCHEMA
+    ) if postings else None
+    frames = [f for f in (doclens, post) if f is not None]
+    est = (hit.bytes if hit else 0) + (estimate_collect_bytes(*frames) if frames else 0)
+    _charge(est, what, budget_bytes)
+    reader = hit
+    if reader is None:
+        tbl = doclens.toArrow()
+        ids = tbl.column("doc_id").to_numpy().astype(np.int64)
+        lens = tbl.column("doc_len").to_numpy().astype(np.int64)
+        if ids.size and ids.min() >= 0 and ids.max() < max(8 * ids.size, 1_000_000):
+            doclen = np.zeros(int(ids.max()) + 1, dtype=np.int64)
+            doclen[ids] = lens
+        else:
+            doclen = dict(zip(ids.tolist(), lens.tolist()))
+        stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
+        reader = SegmentReader(stats, doclen, np.sort(ids), 0)
+    reader = reader._replace(bytes=est)
+    if postings:
+        mem: dict[str, list[dict]] = {}
+        for r in post.toArrow().to_pylist() if post is not None else ():
+            mem.setdefault(r["term"], []).append(r)
+        reader = reader._replace(postings=mem)
+    with _READERS_LOCK:
+        # evict superseded generations of the same dir — a rebuild-per-
+        # batch process must not pin every generation's arrays forever
+        for stale in [k for k in _READERS if k[0] == index_dir]:
+            del _READERS[stale]
+        _READERS[key] = reader
+    return reader
 
 
 def _load_norms(spark, index_dir: str, budget_bytes: int | None = None):
-    """(doclen lookup, n_docs, avgdl), cached per (index_dir, freshness).
-
-    The freshness token is stats.json's (mtime_ns, size): rebuilding or
-    compacting an index at the same path in one process must not serve
-    stale doc lengths. Dense numpy array when doc_ids are nonnegative
-    and reasonably packed (fast vectorized lookups); dict fallback for
-    sparse / hash-derived / negative id spaces.
-
-    ``budget_bytes`` gates ONLY the cache-miss collect: a cache hit
-    costs zero additional driver memory, so it must neither pay the
-    estimate aggregate nor be refusable.
-    """
-    stats_path = fsio.join(index_dir, "stats.json")
-    key = (index_dir, fsio.freshness_token(stats_path, spark))
-    with _DOCLEN_LOCK:
-        hit = _DOCLEN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    stats = json.loads(fsio.read_text(stats_path, spark))
-    doclens_df = spark.read.parquet(f"{index_dir}/doclens")
-    check_preload_budget(doclens_df, f"doclens of {index_dir}", budget_bytes)
-    rows = doclens_df.collect()
-    ids = [r["doc_id"] for r in rows]
-    min_id, max_id = min(ids), max(ids)
-    if min_id >= 0 and max_id < max(8 * len(ids), 1_000_000):
-        dl = np.zeros(max_id + 1, dtype=np.int64)
-        for r in rows:
-            dl[r["doc_id"]] = r["doc_len"]
-        out = (dl, int(stats["n_docs"]), float(stats["avgdl"]))
-    else:
-        out = (
-            {r["doc_id"]: r["doc_len"] for r in rows},
-            int(stats["n_docs"]),
-            float(stats["avgdl"]),
-        )
-    with _DOCLEN_LOCK:
-        # evict superseded versions of the same index — a rebuild-per-batch
-        # process must not pin every generation's doclen array forever
-        for stale in [k for k in _DOCLEN_CACHE if k[0] == index_dir]:
-            del _DOCLEN_CACHE[stale]
-        _DOCLEN_CACHE[key] = out
-    return out
-
-
-_LAST_TF: DataFrame | None = None
-
-
-def release_build_cache() -> None:
-    """Unpersist the tf intermediate of the most recent build."""
-    global _LAST_TF
-    if _LAST_TF is not None:
-        _LAST_TF.unpersist()
-        _LAST_TF = None
+    """(doclen lookup, n_docs, avgdl) of ``index_dir`` from its cached
+    reader (see :func:`open_reader` for the cache key and budget rule)."""
+    r = open_reader(spark, index_dir, budget_bytes, postings=False)
+    return r.doclen, int(r.stats["n_docs"]), float(r.stats["avgdl"])
 
 
 def tf_doclen(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -256,7 +313,6 @@ def build_compressed_index(
     b: float = BM25_B,
     block_size: int = BLOCK_SIZE,
     stats: tuple[int, float] | None = None,
-    persist_tf: bool = False,
     only_buckets: "Sequence[int] | None" = None,
     hot: "tuple[list, int] | None" = None,
 ) -> DataFrame:
@@ -265,18 +321,14 @@ def build_compressed_index(
     ``stats`` = (n_docs, avgdl) if the caller already knows them (the
     resumable build derives them from the doclens sidecar — saves a scan).
 
-    ``persist_tf``: cache the tf aggregate between the hot-term pass and
-    the encoder — this takes the two-shuffle :func:`encode_tf` route so
-    the persisted frame is reusable. Default OFF: the fresh-build path
-    goes through :func:`encode_token_occurrences`, which groups RAW
-    token occurrences straight into (term, segment) encoder groups and
-    computes tf inside the (vectorized numpy) encoder — ONE shuffle of
-    the token stream instead of the tf aggregate's exchange plus the
-    encoder regroup (guide §2.4: two operations keyed compatibly share
-    one exchange; the per-group sort/run-length is noise next to a full
+    The encoder is :func:`encode_token_occurrences`: it groups RAW token
+    occurrences straight into (term, segment) encoder groups and computes
+    tf inside the (vectorized numpy) encoder — ONE shuffle of the token
+    stream instead of the tf aggregate's exchange plus the encoder
+    regroup (guide §2.4: two operations keyed compatibly share one
+    exchange; the per-group sort/run-length is noise next to a full
     extra exchange).
     """
-    spark = docs.sparkSession
     if stats is None:
         stats_row = (
             docs.select(F.size(tokenize_expr(text_col)).cast("long").alias("dl"))
@@ -286,18 +338,6 @@ def build_compressed_index(
         n_docs, avgdl = int(stats_row["n_docs"]), float(stats_row["avgdl"])
     else:
         n_docs, avgdl = int(stats[0]), float(stats[1])
-
-    if persist_tf:
-        from pyspark import StorageLevel
-
-        tf = tf_doclen(docs, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK)
-        global _LAST_TF
-        _LAST_TF = tf
-        return encode_tf(
-            tf, n_docs, avgdl,
-            buckets=buckets, salt_threshold=salt_threshold, salt_fanout=salt_fanout,
-            k1=k1, b=b, block_size=block_size, only_buckets=only_buckets, hot=hot,
-        )
 
     if hot is None:
         hot = sample_hot_terms(tf_doclen(docs, id_col, text_col), salt_threshold)
@@ -697,10 +737,6 @@ def write_index(index_df: DataFrame, path: str) -> None:
         .partitionBy("bucket")
         .parquet(path)
     )
-
-
-def read_index(spark, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 def write_doclens(docs: DataFrame, path: str, id_col="doc_id", text_col="text") -> dict:

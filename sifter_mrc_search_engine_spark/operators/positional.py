@@ -33,7 +33,6 @@ fold :mod:`operators.bm25` pins.
 
 from __future__ import annotations
 
-import functools
 import json
 import re
 from typing import Sequence
@@ -59,6 +58,7 @@ from .compressed_index import (
     DEFAULT_PRELOAD_BUDGET_BYTES,
     _load_norms,
     check_preload_budget,
+    read_bucketed,
     write_doclens,
 )
 from .index_build import corpus_stats, doc_lengths, term_bucket_expr, term_frequencies
@@ -1092,14 +1092,6 @@ def write_positional_index(
 #: positions (phrase, slop, near)
 _FETCH_COLS = ("term", "df", "n", "doc_gaps", "tfs")
 
-#: explicit read schema (the bucket partition column last, as Spark
-#: appends it): a per-request read never pays a schema-inference job
-_READ_SCHEMA = StructType(
-    [f for f in POS_INDEX_SCHEMA.fields if f.name != "bucket"]
-    + [StructField("bucket", LongType())]
-)
-
-
 def decode_positional_row(row, positions: bool = True):
     """numpy inverse of the positional encoder for one fetched row
     ``(term, df, n, doc_gaps, tfs[, poss])``: ``(doc_ids, tfs, pos)``
@@ -1197,25 +1189,10 @@ class PositionalPostings:
 
     def _frame(self, buckets: Sequence[int] | None) -> DataFrame | None:
         """The postings relation over the listed ``bucket=`` directories
-        (all when ``buckets`` is None; None when none exist). Directories
-        go to the reader in groups at most the session's parallel-listing
-        threshold wide, so file listing stays on the driver instead of
-        launching a listing job per request."""
-        root = fsio.join(self.index_dir, "postings")
-        want = None if buckets is None else {f"bucket={b}" for b in buckets}
-        dirs = sorted(
-            p for p in fsio.listdir(root, self.spark)
-            if (name := p.rstrip("/").rsplit("/", 1)[-1]).startswith("bucket=")
-            and (want is None or name in want)
+        (all when ``buckets`` is None; None when none exist)."""
+        return read_bucketed(
+            self.spark, fsio.join(self.index_dir, "postings"), POS_INDEX_SCHEMA, buckets
         )
-        if not dirs:
-            return None
-        step = int(self.spark.conf.get(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"
-        ))
-        reader = self.spark.read.schema(_READ_SCHEMA).option("basePath", root)
-        parts = [reader.parquet(*dirs[i:i + step]) for i in range(0, len(dirs), step)]
-        return functools.reduce(DataFrame.unionByName, parts)
 
     @staticmethod
     def _collect(frame: DataFrame) -> list[tuple]:

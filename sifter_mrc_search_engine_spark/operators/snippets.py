@@ -7,9 +7,11 @@ the contiguous ``window``-token span containing the most query-term
 occurrences (Lucene's unified highlighter default, minus markup). This
 module computes it Spark-first over the shared analyzer surface:
 
-* rank the docs with the repo's BM25 top-k (same tie-break),
-* restrict token positions to the hit docs (broadcast semi-join — top-k
-  is tiny by construction),
+* rank the docs with the repo's BM25 top-k (same tie-break) and collect
+  the hits — top-k is tiny by construction, and the BM25 plan then runs
+  once, not once per consumer,
+* restrict token positions to the hit docs (an ``isin`` filter on the
+  collected ids),
 * count query-term occurrences per candidate window with ONE range-frame
   window aggregate over the occurrence rows only (never one row per
   token of the doc: pruning to query-term occurrences first means the
@@ -20,7 +22,8 @@ module computes it Spark-first over the shared analyzer surface:
 Scale posture (10^12 docs): everything after the BM25 stage touches only
 ``top_k`` documents; the occurrence scan prunes on a broadcast hash of
 those ids, so snippet extraction adds one narrow scan + one tiny window
-aggregate regardless of corpus size.
+aggregate regardless of corpus size; the returned plan joins the
+snippets to the local hit rows and holds no BM25 subtree.
 """
 
 from __future__ import annotations
@@ -53,16 +56,15 @@ def highlight_topk(
         raise ValueError("window must be >= 1")
     qterms = sorted(set(analyze(question)))
     spark = docs.sparkSession
-    if not qterms:
+    bm25 = bm25_brute_force(docs, question, top_k, id_col, text_col, k1, b)
+    hit_rows = bm25.collect()
+    if not hit_rows:
         return spark.createDataFrame([], "doc_id long, score double, snippet string")
-    hits = bm25_brute_force(docs, question, top_k, id_col, text_col, k1, b)
+    hits = spark.createDataFrame(hit_rows, bm25.schema)
 
-    # semi-join the RAW docs to the (tiny, broadcast) hit set before any
-    # tokenize/posexplode: the snippet scans re-tokenize only top_k docs,
-    # not the corpus
-    hit_docs = docs.join(
-        F.broadcast(hits.select(F.col("doc_id").alias(id_col))), id_col, "left_semi"
-    )
+    # filter the RAW docs to the hit ids before any tokenize/posexplode:
+    # the snippet scans re-tokenize only top_k docs, not the corpus
+    hit_docs = docs.filter(F.col(id_col).isin([r["doc_id"] for r in hit_rows]))
     occ = token_positions(hit_docs, id_col, text_col).filter(
         F.col("term").isin(qterms)
     )

@@ -17,9 +17,8 @@ job that wrote its bucket has finished — a kill mid-job leaves no line, so
 the bucket reruns on resume (writes are idempotent per bucket).
 
 Scale notes: the per-bucket filter prunes the ENCODE + WRITE work; the
-tokenize/tf scan still reads the input (at 100 TB you'd additionally
-checkpoint the tf aggregate as its own table — hook left in
-``persist_tf_path``).
+tokenize scan still reads the input (at 100 TB you'd additionally
+checkpoint the token occurrences as their own table).
 """
 
 from __future__ import annotations
@@ -32,10 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import TERM_BUCKETS
-from ..operators.compressed_index import (
-    build_compressed_index,
-    release_build_cache,
-)
+from ..operators.compressed_index import build_compressed_index
 from ..functions import fsio
 from ..functions.analyzer import tokenize_expr
 
@@ -211,7 +207,6 @@ def build_index_resumable(
         .partitionBy("bucket")
         .parquet(f"{index_dir}/postings")
     )
-    release_build_cache()
     wall_ms = int((time.monotonic() - t1) * 1000)
 
     # per-bucket lineage metrics from the landed files (cheap metadata scan)

@@ -31,8 +31,7 @@ from ..functions.cleaning import extract_html_udf
 from ..functions.text_stats import pred_lang_expr, quality_flag_expr
 
 #: persisted intermediates of prepare_corpus runs, released by
-#: :func:`release_prepare_cache` (same pattern as compressed_index's
-#: release_build_cache)
+#: :func:`release_prepare_cache`
 _PREPARE_CACHES: list = []
 
 

@@ -9,9 +9,11 @@ handful of files regardless of index size — this is what makes the design
 hold at 10^12 docs.
 
 Doc lengths: loaded once per (process, index) into dense numpy arrays and
-cached — the Lucene-norms analogue. At true 10^12 scale the norms sidecar
-would be range-partitioned and memory-mapped per executor; the access
-pattern (random lookups by doc_id during scoring) is identical.
+cached, with the preloaded postings, in one segment-reader cache
+(``operators/compressed_index.py``) — the Lucene-norms analogue. At true
+10^12 scale the norms sidecar would be range-partitioned and memory-mapped
+per executor; the access pattern (random lookups by doc_id during
+scoring) is identical.
 
 Batch scoring (``search_many``) distributes queries across executors: each
 query's postings rows are joined to it and the WAND kernel runs inside
@@ -20,6 +22,7 @@ query's postings rows are joined to it and the WAND kernel runs inside
 
 from __future__ import annotations
 
+import functools
 import json
 from typing import Sequence
 
@@ -40,12 +43,12 @@ from ..functions import fsio
 from ..functions.analyzer import analyze
 from ..functions.xxhash import term_bucket
 from ..operators.compressed_index import (  # noqa: F401 - norms cache re-exported
-    _DOCLEN_CACHE,
+    _READERS,
     DEFAULT_PRELOAD_BUDGET_BYTES,
     PreloadBudgetExceeded,
     _load_norms,
-    check_preload_budget,
     invalidate_norms_cache,
+    open_reader,
 )
 from ..operators.wand import wand_topk
 
@@ -62,20 +65,20 @@ class IndexSearcher:
         norms: str = "preload",
         preload_budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES,
     ):
-        """``preload=True`` pulls the postings table into a driver-side
-        term->rows dict — the low-latency serving mode (sub-ms routing, no
-        Spark job per query). Appropriate while the hot index fits driver
-        memory; at 10^12 docs serving runs against the bucket-pruned scan
-        (default) or an external KV tier. Before collecting, the
-        postings size is ESTIMATED (one cheap aggregate) and the preload
+        """``preload=True`` serves from the index's cached
+        :class:`~..operators.compressed_index.SegmentReader` (a built
+        index is one segment): its term->rows dict and norms, loaded to
+        the driver once per process — sub-ms routing, no Spark job per
+        query. Appropriate while the hot index fits driver memory; at
+        10^12 docs serving runs against the bucket-pruned scan (default)
+        or an external KV tier. The load is size-ESTIMATED first and
         refused with :class:`PreloadBudgetExceeded` above
-        ``preload_budget_bytes`` (default 4 GiB) — a clear error naming
-        the knob beats an OOMed driver. ``None`` disables the check.
+        ``preload_budget_bytes`` (default 4 GiB; ``None`` disables).
 
         ``norms``: 'preload' loads the doclens sidecar into driver memory
         on first use (lowest latency; bounded by the norms table fitting
-        the serving head). 'join' never materializes norms on the driver —
-        every query scores through the in-plan doclen join
+        the serving head). 'join' never materializes norms on the driver
+        — every query scores through the in-plan doclen join
         (:meth:`search_many_relational`'s shape), the mode that holds at
         10^12 docs where the norms table itself is cluster-resident."""
         if norms not in ("preload", "join"):
@@ -90,36 +93,19 @@ class IndexSearcher:
         self.doclens = spark.read.parquet(f"{index_dir}/doclens")
         stats = json.loads(fsio.read_text(fsio.join(index_dir, "stats.json"), spark))
         self.n_docs, self.avgdl = int(stats["n_docs"]), float(stats["avgdl"])
-        self._doclen = None  # lazy: join-mode never touches it
         self._preload_budget = preload_budget_bytes
-        self._preload_spent = 0  # postings + lazy norms share ONE budget
         self._mem: dict[str, list] | None = None
         if preload:
-            self._preload_spent = check_preload_budget(
-                self.postings, f"postings of {index_dir}", preload_budget_bytes
-            )
-            self._mem = {}
-            for r in self.postings.collect():
-                self._mem.setdefault(r["term"], []).append(r)
+            reader = open_reader(spark, index_dir, preload_budget_bytes)
+            self._mem, self.doclen = reader.postings, reader.doclen
 
-    @property
+    @functools.cached_property
     def doclen(self):
-        """Driver-resident norms, loaded lazily (preload mode only).
-        The cache-miss collect is budget-checked like every other
-        driver preload — one row per doc is exactly the collect that
-        kills the driver at 10^12 docs — and charged against the SAME
-        budget the constructor's postings preload spent from (two
-        full-budget checks would admit 2x jointly; r5 review)."""
-        if self._doclen is None:
-            remaining = (
-                None
-                if self._preload_budget is None
-                else self._preload_budget - self._preload_spent
-            )
-            self._doclen, _, _ = _load_norms(
-                self.spark, self.index_dir, remaining
-            )
-        return self._doclen
+        """Driver-resident norms, loaded lazily without preload (join mode
+        never touches them). The cache-miss collect is budget-checked
+        like every other driver preload — one row per doc is exactly the
+        collect that kills the driver at 10^12 docs."""
+        return _load_norms(self.spark, self.index_dir, self._preload_budget)[0]
 
     def candidate_rows(self, terms: Sequence[str]) -> list:
         """Postings fetch for a term set.

@@ -6,6 +6,12 @@ streamed-ingest path a living corpus needs: ``readStream`` over arriving
 page files -> ``foreachBatch`` -> one immutable index SEGMENT per batch
 (Lucene-style), each with its own postings/doclens/stats.
 
+Serving: a committed segment is immutable, so its reader (term->rows
+dict and norms, ``operators/compressed_index.py``) is loaded once per
+process and shared by every later :class:`MultiSegmentSearcher`: a query
+runs no Spark job, and a reopen loads only new segments (Lucene's
+``openIfChanged`` reuses segment readers the same way).
+
 Query-time correctness across segments (exact, not approximate):
   * df(term)  = sum of segment dfs
   * N, avgdl  = merged from segment stats (counts and length sums add)
@@ -23,8 +29,11 @@ restoring tight bounds — the classic segment-merge tradeoff.
 
 from __future__ import annotations
 
+import functools
 import json
 import time
+
+import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,6 +45,8 @@ from ..operators.compressed_index import (
     DEFAULT_PRELOAD_BUDGET_BYTES,
     build_compressed_index,
     check_preload_budget,
+    evict_readers,
+    open_reader,
 )
 from ..operators.wand import wand_topk
 
@@ -118,8 +129,9 @@ class MultiSegmentSearcher:
 
     Segments assume exactly-once ingest: a doc_id must appear in at most
     one segment, else df/N/doclen merges double-count (validated at init
-    by comparing the summed per-segment doc counts to the distinct
-    doclen keys — cheap, the doclen dict is built anyway)."""
+    by comparing the summed per-segment doc counts to the distinct doc
+    ids — from the readers' cached id arrays in preload mode, one Spark
+    job in join mode)."""
 
     def __init__(
         self,
@@ -129,10 +141,11 @@ class MultiSegmentSearcher:
         norms: str = "preload",
         preload_budget_bytes: int | None = DEFAULT_PRELOAD_BUDGET_BYTES,
     ):
-        """``norms='preload'`` collects every segment's doclens into a
-        driver dict (lowest latency; bounded by driver memory — the
-        collect is size-estimated first and refused above
-        ``preload_budget_bytes``, default 4 GiB; ``None`` disables).
+        """``norms='preload'`` serves from each segment's cached
+        :class:`~..operators.compressed_index.SegmentReader` (see module
+        doc): no Spark job per query. The loads are size-estimated and
+        refused above ``preload_budget_bytes`` (default 4 GiB; ``None``
+        disables).
         ``norms='join'`` keeps norms cluster-resident — queries score
         through an in-plan doclen join over the lazy unioned sidecars —
         the mode that holds at 10^12 docs."""
@@ -144,26 +157,22 @@ class MultiSegmentSearcher:
         self.segments = list_segments(index_dir, spark)
         if not self.segments:
             raise ValueError(f"no committed segments under {index_dir}")
-        n, s = 0, 0
-        for seg in self.segments:
-            st = json.loads(fsio.read_text(fsio.join(seg, "stats.json"), spark))
-            n += st["n_docs"]
-            s += st["dl_sum"]
-        dl = None
-        for seg in self.segments:
-            d = spark.read.parquet(f"{seg}/doclens")
-            dl = d if dl is None else dl.unionByName(d)
-        self.doclens_df = dl  # lazy union; never collected in join mode
-        self.doclen: dict[int, int] = {}
+        stats = [
+            json.loads(fsio.read_text(fsio.join(seg, "stats.json"), spark))
+            for seg in self.segments
+        ]
+        self._readers = []
         if norms == "preload":
-            check_preload_budget(
-                dl, f"doclens of {index_dir}", preload_budget_bytes
-            )
-            for r in dl.collect():
-                self.doclen[r["doc_id"]] = r["doc_len"]
-            distinct = len(self.doclen)
+            evict_readers(self.segments[0].rsplit("/", 1)[0], self.segments)
+            left = preload_budget_bytes
+            for seg in self.segments:
+                self._readers.append(open_reader(spark, seg, left))
+                left = None if left is None else left - self._readers[-1].bytes
+            distinct = np.unique(np.concatenate([r.doc_ids for r in self._readers])).size
         else:
-            distinct = dl.select(F.countDistinct("doc_id")).collect()[0][0]
+            distinct = self.doclens_df.select(F.countDistinct("doc_id")).collect()[0][0]
+        n = sum(st["n_docs"] for st in stats)
+        s = sum(st["dl_sum"] for st in stats)
         if distinct != n:
             raise ValueError(
                 f"doc_ids overlap across segments ({n} segment docs, "
@@ -172,58 +181,67 @@ class MultiSegmentSearcher:
                 "keep-latest"
             )
         self.n_docs, self.avgdl = n, (s / n if n else 0.0)
-        # ONE lazy unioned postings relation over all segments; a query
-        # is a single bucket+term-pruned scan across them (one Spark job)
-        post = None
-        for seg in self.segments:
-            p = spark.read.parquet(f"{seg}/postings")
-            # allowMissingColumns: segments written before the blockmaxtf
-            # codec column lack it; old rows surface null, which the WAND
-            # cursor treats as "no block metadata" and decodes eagerly
-            post = (
-                p if post is None
-                else post.unionByName(p, allowMissingColumns=True)
-            )
-        self.postings = post
+
+    @functools.cached_property
+    def doclen(self) -> dict[int, int]:
+        """Merged doc_id -> doc_len, built on first access (``{}`` in
+        join mode, which holds no driver norms)."""
+        return {
+            i: int(r.doclen[i]) for r in self._readers for i in r.doc_ids.tolist()
+        }
+
+    def _union(self, table: str) -> DataFrame:
+        """Lazy union of one table of every segment (join mode, search_df).
+        ``allowMissingColumns``: postings written before the blockmaxtf
+        codec column lack it; old rows surface null."""
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [self.spark.read.parquet(f"{seg}/{table}") for seg in self.segments],
+        )
+
+    doclens_df = functools.cached_property(lambda self: self._union("doclens"))
+    postings = functools.cached_property(lambda self: self._union("postings"))
 
     def _pruned(self, tset: list[str]) -> DataFrame:
         from ..functions.xxhash import term_bucket
 
         # driver-side bucket routing (bit-identical to JVM xxhash64) ->
-        # the pruned unioned scan is the only Spark job this query pays
+        # one pruned scan across the segments (join mode / search_df)
         bks = sorted({term_bucket(t, self.buckets) for t in tset})
         return self.postings.filter(F.col("bucket").isin(bks)).filter(
             F.col("term").isin(tset)
         )
 
     def search(self, question: str, top_k: int = DEFAULT_TOP_K, clamp: bool = True):
-        import numpy as np
-
         top_k = max(1, min(int(top_k), MAX_TOP_K) if clamp else int(top_k))
         terms = analyze(question)
         if not terms:
             return []
         tset = sorted(set(terms))
         if self.norms_mode == "join":
-            return self._search_join(tset, top_k)
-        rows = [r.asDict() for r in self._pruned(tset).collect()]
+            rows = self.search_df(" ".join(tset), top_k).collect()
+            return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+        per_seg = [[row for t in tset for row in r.postings.get(t, ())] for r in self._readers]
         # merged df per term; stale segment bounds -> safe UB idf*(k1+1)
         df_tot: dict[str, int] = {}
-        for r in rows:
-            df_tot[r["term"]] = df_tot.get(r["term"], 0) + int(r["n"])
-        fixed = []
-        for r in rows:
-            d = dict(r)
-            d["df"] = df_tot[d["term"]]
-            idf = float(
-                np.log(1.0 + (self.n_docs - d["df"] + 0.5) / (d["df"] + 0.5))
+        for row in (row for rows in per_seg for row in rows):
+            df_tot[row["term"]] = df_tot.get(row["term"], 0) + int(row["n"])
+        merged = {
+            t: {"df": df, "max_impact": float(
+                np.log(1.0 + (self.n_docs - df + 0.5) / (df + 0.5))
+            ) * (BM25_K1 + 1.0)}
+            for t, df in df_tot.items()
+        }
+        # per segment, then merged: a doc's postings all live in its one
+        # segment, so its score is the same float64 sum either way
+        hits = [
+            h for r, rows in zip(self._readers, per_seg) if rows
+            for h in wand_topk(
+                [{**row, **merged[row["term"]]} for row in rows], terms, r.doclen,
+                self.n_docs, self.avgdl, top_k=top_k, use_blockmax=False,
             )
-            d["max_impact"] = idf * (BM25_K1 + 1.0)
-            fixed.append(d)
-        return wand_topk(
-            fixed, terms, self.doclen, self.n_docs, self.avgdl,
-            top_k=top_k, use_blockmax=False,
-        )
+        ]
+        return sorted(hits, key=lambda h: (-h[1], h[0]))[:top_k]
 
     def search_df(self, question: str, top_k: int = DEFAULT_TOP_K) -> DataFrame:
         """The zero-driver-norms merged query as a lazy DataFrame
@@ -252,10 +270,6 @@ class MultiSegmentSearcher:
             ["doc_id"],
         )
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(top_k)
-
-    def _search_join(self, tset: list[str], top_k: int):
-        rows = self.search_df(" ".join(tset), top_k).collect()
-        return [(int(r["doc_id"]), float(r["score"])) for r in rows]
 
 
 def compact_segments(

@@ -138,7 +138,7 @@ def test_top_k_clamped_to_reference_ceiling(searcher):
 
 def test_join_norms_serves_without_driver_doclens(spark, docs, searcher, tmp_path_factory):
     """norms='join' must answer single queries with NO doclens collect —
-    `_DOCLEN_CACHE` stays empty for the index — and results identical to
+    the reader cache holds nothing for the index — and results identical to
     the preload path (the 10^12-doc serving shape: norms stay
     cluster-resident and ride the in-plan join)."""
     from sifter_mrc_search_engine_spark.plans import query as query_mod
@@ -154,7 +154,7 @@ def test_join_norms_serves_without_driver_doclens(spark, docs, searcher, tmp_pat
         for (_, gs), (_, es) in zip(got, exp):
             # JVM Math.log vs libm np.log in idf: allow exactly 1 ulp
             assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
-    assert not any(k[0] == d for k in query_mod._DOCLEN_CACHE), (
+    assert not any(k[0] == d for k in query_mod._READERS), (
         "join mode collected doclens to the driver"
     )
 

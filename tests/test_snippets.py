@@ -89,3 +89,13 @@ def test_highlight_on_real_corpus(spark, sf_dir):
         for r in _duck(docs, S.sql_highlight_topk("spark query", window=8)).itertuples()
     )
     assert got == want
+
+
+def test_highlight_plan_holds_no_bm25_aggregate(docs):
+    """The BM25 top-k is collected once: the returned plan joins the
+    snippets to the local hit rows and never re-runs the score
+    aggregate."""
+    out = S.highlight_topk(docs, "alpha beta", window=4)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Aggregate" not in plan, plan
+    assert sorted(r["doc_id"] for r in out.collect()) == [1, 2, 4]

@@ -288,3 +288,175 @@ def test_multisegment_norms_preload_budget(spark, streamed):
         spark, idx_dir, buckets=8, norms="join", preload_budget_bytes=16
     )
     assert s.doclen == {}
+
+
+def _jobs_for(spark, run) -> int:
+    """Spark jobs ``run`` starts on this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"segments-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "segment-tier query")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the asynchronous listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_preloaded_search_runs_no_spark_job(spark, streamed):
+    _, idx_dir = streamed
+    s = MultiSegmentSearcher(spark, idx_dir, buckets=8)
+    for q in QUERIES + ["zzznotaterm"]:
+        assert _jobs_for(spark, lambda: s.search(q, top_k=10)) == 0, q
+
+
+def _small_pages(spark, lo, hi):
+    return synthesize_pages(spark, 90, partitions=1).selectExpr(
+        "cast(split(url, '/')[4] as long) as doc_id", "text"
+    ).filter(f"doc_id >= {lo} and doc_id < {hi}")
+
+
+def _assert_matches_brute(searcher, docs):
+    for q in QUERIES:
+        expected = [
+            (r["doc_id"], r["score"])
+            for r in bm25_brute_force(docs, q, top_k=10).collect()
+        ]
+        got = searcher.search(q, top_k=10)
+        assert [d for d, _ in got] == [d for d, _ in expected], q
+        for (_, gs), (_, es) in zip(got, expected):
+            assert gs == pytest.approx(es, rel=1e-12, abs=1e-12)
+
+
+def test_reopen_loads_only_changed_segments_and_evicts_dropped(
+    spark, tmp_path, monkeypatch
+):
+    """Committed segments are immutable, so a reopen reuses every cached
+    segment reader: it loads only a segment that is new or re-committed
+    at the same path, and drops the readers of segments that are gone."""
+    import shutil
+
+    from sifter_mrc_search_engine_spark.operators import compressed_index as C
+    from sifter_mrc_search_engine_spark.streaming.incremental import _write_segment
+
+    idx_dir = str(tmp_path / "idx")
+    parts = [_small_pages(spark, lo, lo + 30).cache() for lo in (0, 30, 60)]
+    for i in (0, 1):
+        _write_segment(parts[i], f"{idx_dir}/segments/seg={i}", buckets=4)
+    MultiSegmentSearcher(spark, idx_dir, buckets=4)
+
+    loaded = []
+    real = C.read_bucketed
+
+    def spy(spark_, root, *a, **kw):
+        loaded.append(root.rsplit("/", 2)[-2])
+        return real(spark_, root, *a, **kw)
+
+    monkeypatch.setattr(C, "read_bucketed", spy)
+    _write_segment(parts[2], f"{idx_dir}/segments/seg=2", buckets=4)
+    s = MultiSegmentSearcher(spark, idx_dir, buckets=4)
+    assert loaded == ["seg=2"]
+    _assert_matches_brute(s, parts[0].unionByName(parts[1]).unionByName(parts[2]))
+
+    # seg=1 re-committed at the same path with other docs: re-read
+    loaded.clear()
+    moved = _small_pages(spark, 0, 90).filter("doc_id >= 30 and doc_id < 45")
+    _write_segment(moved, f"{idx_dir}/segments/seg=1", buckets=4)
+    s = MultiSegmentSearcher(spark, idx_dir, buckets=4)
+    assert loaded == ["seg=1"]
+    _assert_matches_brute(s, parts[0].unionByName(moved).unionByName(parts[2]))
+
+    # seg=0 dropped: its reader leaves the cache on the next open
+    seg0 = f"{idx_dir}/segments/seg=0"
+    assert any(k[0] == seg0 for k in C._READERS)
+    shutil.rmtree(seg0)
+    loaded.clear()
+    s = MultiSegmentSearcher(spark, idx_dir, buckets=4)
+    assert loaded == []
+    assert not any(k[0] == seg0 for k in C._READERS)
+    _assert_matches_brute(s, moved.unionByName(parts[2]))
+
+
+def test_held_searcher_answers_from_its_snapshot_during_ingest(spark, tmp_path):
+    """A searcher keeps serving its own segment set while another thread
+    streams a new file in and opens a searcher over the grown set."""
+    import threading
+    import time
+
+    in_dir, idx_dir, ckpt = (str(tmp_path / d) for d in ("in", "idx", "ckpt"))
+    first, second = _small_pages(spark, 0, 45), _small_pages(spark, 45, 90)
+    first.coalesce(1).write.parquet(f"{in_dir}/chunk=0")
+    stream_build_index(spark, f"{in_dir}/chunk=*", idx_dir, ckpt, buckets=4)
+    held = MultiSegmentSearcher(spark, idx_dir, buckets=4)
+    before = {q: held.search(q, top_k=10) for q in QUERIES}
+
+    opened, errors = [], []
+
+    def ingest():
+        try:
+            second.coalesce(1).write.parquet(f"{in_dir}/chunk=1")
+            stream_build_index(spark, f"{in_dir}/chunk=*", idx_dir, ckpt, buckets=4)
+            opened.append(MultiSegmentSearcher(spark, idx_dir, buckets=4))
+        except Exception as exc:  # surfaced by the main thread
+            errors.append(exc)
+
+    t = threading.Thread(target=ingest)
+    t.start()
+    deadline = time.monotonic() + 300
+    while True:
+        for q in QUERIES:
+            assert held.search(q, top_k=10) == before[q], q
+        if not t.is_alive() or time.monotonic() > deadline:
+            break
+    t.join(timeout=10)
+    assert not t.is_alive()
+    assert not errors, errors
+    assert len(held.segments) == 1 and len(opened[0].segments) == 2
+    _assert_matches_brute(held, first)
+    _assert_matches_brute(opened[0], first.unionByName(second))
+
+
+def test_reader_cache_under_concurrent_open_and_invalidate(spark, streamed):
+    """Searchers opened and queried from more threads than cores, while
+    the cache is invalidated under them, always answer exactly: the
+    lock-guarded cache never hands out a half-loaded reader."""
+    import sys
+    import threading
+
+    from sifter_mrc_search_engine_spark.operators import compressed_index as C
+
+    _, idx_dir = streamed
+    segs = list_segments(idx_dir)
+    want = {q: MultiSegmentSearcher(spark, idx_dir, buckets=8).search(q) for q in QUERIES}
+    errors = []
+
+    def serve():
+        try:
+            for _ in range(6):
+                s = MultiSegmentSearcher(spark, idx_dir, buckets=8)
+                for q in QUERIES:
+                    if s.search(q) != want[q]:
+                        errors.append(q)
+        except Exception as exc:  # surfaced by the main thread
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        workers = [threading.Thread(target=serve) for _ in range(8)]
+        for t in workers:
+            t.start()
+        C.invalidate_norms_cache(segs[0])
+        for _ in range(200):
+            C.evict_readers(segs[0].rsplit("/", 1)[0], segs)
+            C.invalidate_norms_cache(f"{idx_dir}/not-a-segment")
+        for t in workers:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in workers)
+    assert not errors, errors

@@ -74,13 +74,66 @@ def norm_rows(pdf, cols):
     return sorted("|".join(vals) for vals in zip(*cols_str))
 
 
-def main():
-    spark = get_spark("verify-entry", master="local[8]", shuffle_partitions=16)
+def oracle_connection(sf_dir: str):
+    """DuckDB connection with a view per table present under ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
-        p = f"{SF_DIR}/{t}.parquet"
+        p = f"{sf_dir}/{t}.parquet"
         if Path(p).exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+    return con
+
+
+def entry_problems(sdf, con, sql: str) -> list[str]:
+    """Every reason the gate rejects one entry's Spark result ``sdf``
+    against its DuckDB ``sql`` oracle (empty when it passes): the
+    timestamp hash hazard, column names, row count, the canonicalized
+    row multiset and per-column dtype kinds."""
+    scols = sdf.columns
+    spdf = sdf.toPandas()
+    srows = [tuple(r) for r in spdf.itertuples(index=False)]
+    # Hash hazard: raw timestamp outputs with sub-second precision hash
+    # differently between Arrow (ns) and DuckDB (µs) even for equal
+    # instants. Entry queries must emit epoch-micros BIGINT or strings.
+    ts_cols = [c for c, t in sdf.dtypes if t.startswith("timestamp")]
+    if ts_cols:
+        import datetime as _dt
+
+        if any(
+            isinstance(v, _dt.datetime) and v.microsecond != 0
+            for r in srows
+            for v in r
+        ):
+            return [
+                f"hash-hazard: µs-precision timestamp column(s) {ts_cols} "
+                "— emit epoch micros BIGINT instead"
+            ]
+    dres = con.execute(sql)
+    dcols = [d[0] for d in dres.description]
+    ddf = dres.df()
+    drows = [tuple(r) for r in ddf.itertuples(index=False)]
+    if sorted(scols) != sorted(dcols):
+        return [f"cols {scols} vs {dcols}"]
+    problems = []
+    if len(srows) != len(drows):
+        problems.append(f"count {len(srows)} vs {len(drows)}")
+    else:
+        a, b = norm_rows(spdf, scols), norm_rows(ddf, dcols)
+        diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
+        if diffs:
+            problems.append("vals" + "".join(
+                f"\n   spark={x[:120]}\n   duck ={y[:120]}" for x, y in diffs
+            ))
+    if len(srows) and len(drows):
+        problems += [
+            f"dtype {m}" for m in dtype_kind_mismatches(spdf, ddf, sorted(scols))
+        ]
+    return problems
+
+
+def main():
+    spark = get_spark("verify-entry", master="local[8]", shuffle_partitions=16)
+    con = oracle_connection(SF_DIR)
 
     if ONLY is None:
         res = e.entry(spark)
@@ -93,57 +146,15 @@ def main():
         if ONLY is not None and name not in ONLY:
             continue
         sdf = fn(spark, SF_DIR)
-        scols = sdf.columns
-        spdf = sdf.toPandas()
-        srows = [tuple(r) for r in spdf.itertuples(index=False)]
-        # Driver-hash hazard: raw timestamp outputs with sub-second
-        # precision hash differently between Arrow (ns) and DuckDB (µs)
-        # even for equal instants (r2's rel_user_sessions red cell).
-        # Entry queries must emit epoch-micros BIGINT or strings instead.
-        ts_cols = [c for c, t in sdf.dtypes if t.startswith("timestamp")]
-        if ts_cols:
-            import datetime as _dt
-
-            hazard = any(
-                isinstance(v, _dt.datetime) and v.microsecond != 0
-                for r in srows
-                for v in r
-            )
-            if hazard:
-                failures += 1
-                print(
-                    f"{name:32s} FAIL hash-hazard: µs-precision timestamp "
-                    f"column(s) {ts_cols} — emit epoch micros BIGINT instead"
-                )
-                continue
         if name not in oracles:
-            print(f"{name:32s} rows-only: {len(srows)} rows")
+            print(f"{name:32s} rows-only: {sdf.count()} rows")
             continue
-        dres = con.execute(oracles[name])
-        dcols = [d[0] for d in dres.description]
-        ddf = dres.df()
-        drows = [tuple(r) for r in ddf.itertuples(index=False)]
-        ok_cols = sorted(scols) == sorted(dcols)
-        kind_bad = (
-            dtype_kind_mismatches(spdf, ddf, sorted(scols))
-            if ok_cols and len(srows) and len(drows)
-            else []
-        )
-        ok_count = len(srows) == len(drows)
-        ok_vals = (
-            ok_cols and norm_rows(spdf, scols) == norm_rows(ddf, dcols)
-        )
-        status = "OK" if (ok_cols and ok_count and ok_vals and not kind_bad) else "FAIL"
-        if status == "FAIL":
+        problems = entry_problems(sdf, con, oracles[name])
+        if problems:
             failures += 1
-            print(f"{name:32s} {status} cols={ok_cols}({scols} vs {dcols}) count={ok_count}({len(srows)} vs {len(drows)}) vals={ok_vals} dtypes={kind_bad or 'ok'}")
-            if ok_cols and ok_count and not ok_vals:
-                a, b = norm_rows(spdf, scols), norm_rows(ddf, dcols)
-                diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                for x, y in diffs:
-                    print(f"   spark={x[:120]}\n   duck ={y[:120]}")
+            print(f"{name:32s} FAIL " + "; ".join(problems))
         else:
-            print(f"{name:32s} OK ({len(srows)} rows)")
+            print(f"{name:32s} OK")
     spark.stop()
     sys.exit(1 if failures else 0)
 
